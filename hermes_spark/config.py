@@ -285,7 +285,9 @@ def load_config(source) -> dict:
     }
     if not isinstance(p["source"], str) or not isinstance(p["work_dir"], str):
         raise ConfigError(p_path, "source and work_dir must be strings")
-    for k in ("retry_every", "maintain_every", "max_files_per_trigger"):
+    for k in (
+        "retry_every", "maintain_every", "max_files_per_trigger", "n_buckets"
+    ):
         if pipeline[k] is not None and pipeline[k] < 1:
             raise ConfigError(f"{p_path}.{k}", f"must be >= 1, got {pipeline[k]}")
 

@@ -27,8 +27,8 @@ per new batch:
 The store is a :class:`hermes_spark.tables.ParquetMergeTable` —
 atomic versioned commits, batch-id idempotence — under a
 CONTENT-STABLE batch id (xxhash of the sorted new-doc ids, the
-drain_queue pattern), so a crash-replay of the same input batch
-re-merges as a no-op and returns the same survivors: the whole step
+``ClientLoop.retry_queue`` pattern), so a crash-replay of the same
+input batch re-merges as a no-op and returns the same survivors: the whole step
 is effectively-once.  The store is SINGLE-WRITER (the ledger is an
 append-only file, same assumption as every ParquetMergeTable target):
 run one dedup job per store at a time.  Store size is O(kept docs) × num_hashes longs —

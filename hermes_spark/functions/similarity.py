@@ -29,6 +29,41 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# Near-tie width of the two-phase top-k preselect.  The batch matmul
+# sums in a different order than the JVM fold (and BLAS scores even
+# IDENTICAL rows a few ulps apart, ~1e-15 at dim 64), so every score
+# within this width of the cut is kept: a true top-k row is then never
+# cut, however many near-duplicates tie with it.
+_TIE_TOL = 1e-9
+
+
+def _preselect(sims: np.ndarray, m: int):
+    """(row, column) indices of each column's top-``m`` scores, widened
+    to every score within ``_TIE_TOL`` of the m-th largest; masked
+    (-inf) pairs are never selected."""
+    thr = np.partition(sims, -m, axis=0)[-m]
+    return np.nonzero((sims >= thr - _TIE_TOL) & (sims > -np.inf))
+
+
+def _preselect_cut(stage1: DataFrame, query_id_col: str, m: int) -> DataFrame:
+    """The global cut over the batch-local candidates: per query, every
+    candidate within ``_TIE_TOL`` of the m-th best ``approx``."""
+    w = (
+        Window.partitionBy(query_id_col)
+        .orderBy(F.col("approx").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    thr = F.nth_value("approx", m).over(w)
+    return (
+        stage1.withColumn("_thr", thr)
+        .where(
+            F.col("_thr").isNull()
+            | (F.col("approx") >= F.col("_thr") - _TIE_TOL)
+        )
+        .select(query_id_col, "neighbor_id")
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -53,10 +88,11 @@ def brute_force_topk(
     recomputes the cosine of the few surviving candidates with the SAME
     JVM fold expressions the naive plan used and ranks with the same
     (cosine DESC, neighbor_id ASC) window — so the output is identical
-    to the naive plan: the matmul (whose summation order differs from
-    the fold only in last-ulp rounding) merely has to rank the true
-    top-k inside the top-(k+20), a 20-deep safety margin against
-    ~1e-13 rounding noise on scores whose gaps are ~1e-3.
+    to the naive plan.  The matmul's summation order differs from the
+    fold only in last-ulp rounding, so at most k-1 rows can score more
+    than ``_TIE_TOL`` above a true top-k row; both cuts keep every row
+    within ``_TIE_TOL`` of the k+20-th score, which therefore keeps
+    the true top-k even when more than 20 near-duplicates tie.
 
     NaN cosines (zero-norm vectors) are mapped to +inf in phase 1 so
     they are always preselected; phase 2 then reproduces the naive
@@ -115,31 +151,19 @@ def brute_force_topk(
                     sims = (mat @ qm[s:e].T) / np.outer(vn, qn[s:e])
                 sims[np.isnan(sims)] = np.inf  # Spark sorts NaN first on DESC
                 sims[vid[:, None] == qids[None, s:e]] = -np.inf  # self-match
-                m = min(m_sel, n)
-                idx = np.argpartition(-sims, m - 1, axis=0)[:m]  # (m, e-s)
-                scores = np.take_along_axis(sims, idx, axis=0)
-                qcol = np.repeat(qids[s:e], m)
-                ncol = vid[idx.T.ravel()]
-                scol = scores.T.ravel()
-                keep = scol != -np.inf
+                r, c = _preselect(sims, min(m_sel, n))
                 yield pd.DataFrame(
                     {
-                        query_id_col: qcol[keep],
-                        "neighbor_id": ncol[keep],
-                        "approx": scol[keep],
+                        query_id_col: qids[s:e][c],
+                        "neighbor_id": vid[r],
+                        "approx": sims[r, c],
                     }
                 )
 
     nparts = sc.defaultParallelism
     v1 = v.repartition(nparts) if v.rdd.getNumPartitions() < nparts else v
-    stage1 = v1.mapInPandas(select_candidates, out_schema)
-    wa = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
-    )
-    cands = (
-        stage1.withColumn("_rn", F.row_number().over(wa))
-        .where(F.col("_rn") <= m_sel)
-        .select(query_id_col, "neighbor_id")
+    cands = _preselect_cut(
+        v1.mapInPandas(select_candidates, out_schema), query_id_col, m_sel
     )
     # phase 2: exact re-score of the candidates with the SAME fold
     # expressions and window ordering the naive plan used
@@ -306,8 +330,8 @@ def ivf_topk(
     cents = _kmeans_centroids(sample, n_lists, seed=seed)
     cents_n = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
 
-    # Two-phase exact-within-candidates plan (same pattern and 20-deep
-    # margin argument as brute_force_topk, guide §4.2): the old shape
+    # Two-phase exact-within-candidates plan (same pattern and near-tie
+    # argument as brute_force_topk, guide §4.2): the old shape
     # scored every (probed-list vector × query) candidate with the
     # interpreted 64-step fold — millions of folds once lists are
     # dense.  Phase 1 scores each Arrow batch against the broadcast
@@ -315,10 +339,10 @@ def ivf_topk(
     # list the query does not probe to -inf (list assignment and probe
     # selection use the numerically identical float64 formulas the old
     # per-row UDFs used, so the candidate SET is identical), and emits
-    # the batch-local top-m per query.  Phase 2 re-scores survivors
-    # with the SAME fold expressions and (cosine DESC, neighbor_id ASC)
-    # window the old plan used — identical output rows and doubles
-    # (pinned row-exact by test_round7_opts).
+    # the batch-local top-m (plus near-ties) per query.  Phase 2
+    # re-scores survivors with the SAME fold expressions and (cosine
+    # DESC, neighbor_id ASC) window the old plan used — identical
+    # output rows and doubles (pinned row-exact by test_round7_opts).
     from hermes_spark.functions.dedup import _spread
 
     m_sel = k + 20
@@ -375,31 +399,19 @@ def ivf_topk(
             sims[np.isnan(sims)] = np.inf    # Spark sorts NaN first on DESC
             sims[~pmask[:, al].T] = -np.inf  # non-probed (query, list) pairs
             sims[vid[:, None] == qids[None, :]] = -np.inf  # self-match
-            m = min(m_sel, n)
-            idx = np.argpartition(-sims, m - 1, axis=0)[:m]
-            scores = np.take_along_axis(sims, idx, axis=0)
-            qcol = np.repeat(qids, m)
-            ncol = vid[idx.T.ravel()]
-            scol = scores.T.ravel()
-            keep = scol != -np.inf
+            r, c = _preselect(sims, min(m_sel, n))
             import pandas as _pd
 
             yield _pd.DataFrame(
                 {
-                    query_id_col: qcol[keep],
-                    "neighbor_id": ncol[keep],
-                    "approx": scol[keep],
+                    query_id_col: qids[c],
+                    "neighbor_id": vid[r],
+                    "approx": sims[r, c],
                 }
             )
 
-    stage1 = v.mapInPandas(select_candidates, out_schema)
-    wa = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
-    )
-    cands = (
-        stage1.withColumn("_rn", F.row_number().over(wa))
-        .where(F.col("_rn") <= m_sel)
-        .select(query_id_col, "neighbor_id")
+    cands = _preselect_cut(
+        v.mapInPandas(select_candidates, out_schema), query_id_col, m_sel
     )
     qn_df = q.withColumn("_nq", _norm(F.col("q")))
     vn_df = v.withColumn("_nv", _norm(F.col("v")))

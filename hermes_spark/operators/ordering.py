@@ -1,21 +1,15 @@
-"""Ordered-delivery semantics (W2/W3) and the error-queue model.
+"""Per-key ordered delivery (W3) for the error queue.
 
-Reference orderings the engine reproduces deterministically:
+The reference's error queue yields only the *oldest* pending event per
+pkey; younger events of a blocked key are skipped
+(clients/errorqueue.py:611-641), and events whose object is an
+FK-parent of another errored object are also skipped
+(errorqueue.py:700-711).
 
-* W2 — type/op-level event ordering per cycle: added+modified in
-  datamodel declaration order, removed in reverse
-  (/root/reference/server/hermesserver.py:678-685).
-* W3 — per-key ordering: the error queue yields only the *oldest*
-  pending event per pkey; younger events of a blocked key are skipped
-  (clients/errorqueue.py:611-641), and events whose object is an
-  FK-parent of another errored object are also skipped
-  (errorqueue.py:700-711).
-
-Spark restatement: W2 is a deterministic sort key applied before the
-sink MERGE; W3 is ``row_number() OVER (PARTITION BY key ORDER BY
-offset) = 1`` plus an anti-join against the blocked-parent key set.
-Both are single window/join stages — ordering is a property of the
-plan, not of a driver-side loop.
+Spark restatement: ``row_number() OVER (PARTITION BY key ORDER BY
+offset) = 1`` plus an anti-join against the blocked-parent key set —
+single window/join stages, so ordering is a property of the plan, not
+of a driver-side loop.
 """
 
 from __future__ import annotations
@@ -24,32 +18,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# op ranks: inserts/updates apply before deletes within a batch (W2).
-OP_RANK = {"insert": 0, "update": 1, "delete": 2}
-
-
-def with_apply_order(
-    events: DataFrame,
-    op_col: str = "op",
-    type_rank: dict[str, int] | None = None,
-    type_col: str | None = None,
-) -> DataFrame:
-    """Attach a deterministic (op_rank, type_rank) apply-order column."""
-    op_rank = F.coalesce(
-        *[F.when(F.col(op_col) == k, F.lit(v)) for k, v in OP_RANK.items()],
-        F.lit(99),
-    )
-    df = events.withColumn("_op_rank", op_rank)
-    if type_rank and type_col:
-        tr = F.coalesce(
-            *[F.when(F.col(type_col) == k, F.lit(v)) for k, v in type_rank.items()],
-            F.lit(99),
-        )
-        # removed events apply in reverse declaration order (W2)
-        tr = F.when(F.col(op_col) == "delete", -tr).otherwise(tr)
-        df = df.withColumn("_type_rank", tr)
-    return df
 
 
 def oldest_event_per_key(

@@ -1,7 +1,8 @@
-"""Stateful per-conversation CDC classification (the streaming J3).
+"""Stateful CDC classification (the streaming J3).
 
 Each arriving turn is classified insert / update / delete against a
-keyed state store, reproducing the reference's snapshot-diff semantics
+state store keyed by a hash bucket of its conversation, reproducing
+the reference's snapshot-diff semantics
 (/root/reference/lib/datamodel/dataobjectlist.py:294-322 and the client
 apply path clients/datamodel.py:645-659) incrementally:
 
@@ -33,14 +34,16 @@ Design for 10^12 turns — the hot path is *binary + vectorized*:
   computed JVM-side **after** classification, on emitted (changed)
   rows only — re-delivered no-op rows never pay the 64-byte string
   round trip through Arrow.
-* Bucketed state (``n_buckets``) is stored as **binary blobs** (packed
-  little-endian numpy buffers: int64 composite keys, int64 ts, int64
-  cks, a tombstone bitmask, and a dict-encoded conversation table).
-  The state round trip is a handful of ``bytes`` objects per group —
-  pure memcpy through Arrow — instead of millions of boxed Python
-  ints/strings per micro-batch.  At 5M live turns the full state is
-  ~120 MB of buffers; boxed, it was multiple GB of object churn, which
-  is what flattened the N→4N scaling curve in round 1.
+* State is keyed by ``xxhash64(conv_id) mod n_buckets`` — one grouped
+  state row per bucket, not per conversation — and stored as **binary
+  blobs** (packed little-endian numpy buffers: int64 composite keys,
+  int64 ts, int64 cks, a tombstone bitmask, and a dict-encoded
+  conversation table).  The state round trip is a handful of
+  ``bytes`` objects per group — pure memcpy through Arrow — instead
+  of millions of boxed Python ints/strings per micro-batch.  At 5M
+  live turns the full state is ~120 MB of buffers; boxed, it was
+  multiple GB of object churn, which is what flattened the N→4N
+  scaling curve in round 1.
 * Classification itself is branch-free numpy over the whole group
   (lexsort → per-key in-batch winner → ``searchsorted`` state lookup →
   vectorized truth table); no per-row Python anywhere.
@@ -62,17 +65,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from hermes_spark.operators.checksum import row_cksum
 from hermes_spark.schema import CHANGE_EVENT_SCHEMA, TRANSCRIPTS
 
-# per-conv state: packed little-endian buffers over this conv's turns
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("keys", T.BinaryType(), True),    # int64[] = turn_idx, sorted
-        T.StructField("ts_us", T.BinaryType(), True),   # int64[]
-        T.StructField("cks", T.BinaryType(), True),     # int64[] xxhash64
-        T.StructField("tomb", T.BinaryType(), True),    # packbits bitmask
-    ]
-)
-
-# bucketed state: every conversation of the bucket, dict-encoded
+# state of one bucket: every conversation in it, dict-encoded
 BUCKET_STATE_SCHEMA = T.StructType(
     [
         T.StructField("uconvs", T.BinaryType(), True),  # length-prefixed conv ids
@@ -88,8 +81,7 @@ CHANGE_CORE_SCHEMA = T.StructType(
     [f for f in CHANGE_EVENT_SCHEMA.fields if f.name != "cksum"]
 )
 
-_IN_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "cks64"]
-_BUCKET_IN_COLS = [*_IN_COLS, "_bucket"]
+_IN_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "cks64", "_bucket"]
 
 _NEG_INF = -(1 << 62)
 
@@ -245,57 +237,19 @@ def _emit(pdf: pd.DataFrame, w: np.ndarray, opc: np.ndarray,
     )
 
 
-def _classify_group(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-conversation grouped-state function (state key = conv_id).
-
-    All Arrow chunks of the group are concatenated before classifying,
-    so exactly one compacted event per key per micro-batch is emitted
-    even when the group spans chunks (mega-conversations)."""
-    if state.exists:
-        keys_b, ts_b, cks_b, tomb_b = state.get
-        k_s = _unpack(keys_b)
-        ts_s, cks_s = _unpack(ts_b), _unpack(cks_b)
-        tomb_s = _unpack_mask(tomb_b, len(k_s))
-    else:
-        k_s = np.empty(0, _I64)
-        ts_s = cks_s = k_s
-        tomb_s = np.zeros(0, bool)
-
-    chunks = list(pdfs)
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    pdf = _drop_null_ts(pdf)
-    ti, ts, ts_us, cks, tomb = _batch_arrays(pdf)
-
-    w, opc, changed, (k_n, ts_n, cks_n, tomb_n) = _classify_core(
-        k_s, ts_s, cks_s, tomb_s, ti, ts_us, cks, tomb
-    )
-    if changed:
-        state.update(
-            (
-                k_n.astype(_I64).tobytes(),
-                ts_n.astype(_I64).tobytes(),
-                cks_n.astype(_I64).tobytes(),
-                np.packbits(tomb_n).tobytes(),
-            )
-        )
-    out = _emit(pdf, w, opc, ts)
-    if out is not None:
-        yield out
-
-
 def _classify_bucket(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Bucketed grouped-state function: same per-(conv,turn) truth
-    table; the state holds every conversation of the bucket with the
-    conv dimension dict-encoded (conv table + int32 index packed into
-    the int64 composite key), so per-turn state is 25 bytes flat."""
+    """Grouped-state function (state key = hash bucket of conv_id):
+    the state holds every conversation of the bucket with the conv
+    dimension dict-encoded (conv table + int32 index packed into the
+    int64 composite key), so per-turn state is 25 bytes flat.
+
+    All Arrow chunks of the group are concatenated before classifying,
+    so exactly one compacted event per key per micro-batch is emitted
+    even when the group spans chunks (mega-conversations)."""
     if state.exists:
         uconvs_b, keys_b, ts_b, cks_b, tomb_b = state.get
         uconvs = _unpack_convs(uconvs_b)
@@ -376,37 +330,29 @@ def with_cks64(turns: DataFrame) -> DataFrame:
 def classify_changes(
     turns: DataFrame,
     watermark: str | None = "10 minutes",
-    n_buckets: int | None = 1024,
+    n_buckets: int = 1024,
 ) -> DataFrame:
     """Streaming DataFrame of turns → change-event stream.
 
-    ``n_buckets``: state-key coarsening factor (None → state keyed
-    directly on conv_id; semantics identical, tests assert it).  The
-    final target state is delivery-order-independent (last-writer by
-    event time), so any micro-batch grouping of the same input yields
-    the same target — the batch oracle is last-writer per key.
+    ``n_buckets``: state-key coarsening factor — the state is keyed by
+    ``xxhash64(conv_id) mod n_buckets`` (semantics do not depend on
+    it; ``n_buckets=1`` puts every conversation in one state row).
+    The final target state is delivery-order-independent (last-writer
+    by event time), so any micro-batch grouping of the same input
+    yields the same target — the batch oracle is last-writer per key.
     """
+    if n_buckets is None or n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
     src = with_cks64(turns)
     if watermark is not None and turns.isStreaming:
         src = src.withWatermark("ts", watermark)
-    if n_buckets is None:
-        changed = src.select(*_IN_COLS).groupBy("conv_id").applyInPandasWithState(
-            _classify_group,
-            outputStructType=CHANGE_CORE_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    else:
-        src = src.withColumn(
-            "_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-        )
-        changed = src.select(*_BUCKET_IN_COLS).groupBy("_bucket").applyInPandasWithState(
-            _classify_bucket,
-            outputStructType=CHANGE_CORE_SCHEMA,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    src = src.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
+    changed = src.select(*_IN_COLS).groupBy("_bucket").applyInPandasWithState(
+        _classify_bucket,
+        outputStructType=CHANGE_CORE_SCHEMA,
+        stateStructType=BUCKET_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     # sha256 event checksum: JVM-side, on emitted rows only
     return changed.withColumn("cksum", row_cksum(list(TRANSCRIPTS.event_visible)))

@@ -10,6 +10,11 @@ bandwidth-lean alternative: the stateful operator round-trips its full
 state through Arrow/Python every batch, while this mode's state reads
 are columnar parquet scans that never leave the JVM.
 
+``JoinCdcPipeline`` is the shared client loop (``pipeline.ClientLoop``:
+validate, apply, error queue, scheduled retry, maintenance) over the
+RAW source stream — ``JoinCdcSink`` classifies each batch itself and
+commits through the same ``ExactlyOnceSink`` the stateful mode uses.
+
 Semantics are identical (last-writer-by-event-time, stale suppression,
 tombstone memory) — the equivalence test drives both pipelines over
 the same reordered input and asserts identical live state.
@@ -31,13 +36,13 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
-from hermes_spark.schema import TRANSCRIPT_SCHEMA
 from hermes_spark.streaming.cdc import with_content_cksum
+from hermes_spark.streaming.pipeline import ClientLoop
+from hermes_spark.streaming.sink import ExactlyOnceSink
 from hermes_spark.tables import ParquetMergeTable
 
 _NEG_INF = -(1 << 62)
@@ -74,7 +79,7 @@ def bucket_of(conv_col, n_buckets: int):
 
 def _rank(ts_col, tomb_col, cks_col):
     """Last-writer rank (ts_us, cks-or--inf) — identical tie rules to
-    streaming/cdc.py::_apply_batch."""
+    streaming/cdc.py::_classify_core."""
     return F.struct(
         F.unix_micros(ts_col).alias("r_ts"),
         F.when(tomb_col, F.lit(_NEG_INF)).otherwise(cks_col).alias("r_ck"),
@@ -100,29 +105,29 @@ class JoinCdcSink:
     same files anyway.  The sink therefore tracks how many buckets the
     PREVIOUS batch touched via an Observation riding the merge job
     (zero extra jobs) and skips the collect — one job per batch, no
-    persist — while the stream stays dense (≥ ``prune_threshold`` of
+    persist — while the stream stays dense (≥ ``PRUNE_THRESHOLD`` of
     the buckets); a sparse batch flips it back to the pruned fold.
     Dense and sparse regimes each get their optimal plan without any
     per-batch measurement cost."""
+
+    # fraction of buckets above which the touched-bucket collect is
+    # skipped; 0 disables pruning entirely, >1 forces it always
+    PRUNE_THRESHOLD = 0.5
 
     def __init__(
         self,
         target: ParquetMergeTable,
         n_buckets: int = 32,
-        prune_threshold: float = 0.5,
         dlq=None,
         validator=None,
     ) -> None:
-        from hermes_spark.streaming.sink import ExactlyOnceSink
-
+        if n_buckets is None or n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
         self.target = target
         self.n_buckets = n_buckets
         self.bucketed = bool(
             target.partition_by and "_bucket" in target.partition_by
         )
-        # fraction of buckets above which the touched-bucket collect is
-        # skipped; 0 disables pruning entirely, >1 forces it always
-        self.prune_threshold = prune_threshold
         self._last_touched: int | None = None
         # the COMMIT goes through the shared exactly-once sink: the
         # classified rows are this mode's change events, so validator
@@ -167,7 +172,7 @@ class JoinCdcSink:
             )
             dense = (
                 self._last_touched is not None
-                and self._last_touched >= self.prune_threshold * self.n_buckets
+                and self._last_touched >= self.PRUNE_THRESHOLD * self.n_buckets
             )
             if dense:
                 # dense stream: every bucket is (almost) touched — the
@@ -254,26 +259,14 @@ class JoinCdcSink:
 
 
 @dataclass
-class JoinCdcPipeline:
-    """Same contract as CdcPipeline, JVM-only classification."""
+class JoinCdcPipeline(ClientLoop):
+    """The client loop over the JVM-only join classifier: the sink
+    classifies the raw source batch itself."""
 
-    spark: SparkSession
-    source_dir: str
-    work_dir: str
-    max_files_per_trigger: int | None = None
     n_buckets: int = 32
-    prune_threshold: float = 0.5
-    # operational parity with CdcPipeline (one client loop, two
-    # classifiers): validator diversion + scheduled dependency-ordered
-    # drain, FK gating policy, and in-stream incremental maintenance
-    validator: object | None = None
-    retry_every: int | None = None
-    fk_map: list | None = None
-    foreignkeys_policy: str = "disabled"
-    maintain_every: int | None = None
 
     def __post_init__(self) -> None:
-        self.checkpoint = os.path.join(self.work_dir, "checkpoint")
+        super().__post_init__()
         # compaction is out-of-band (maintain()): the sink commit stays
         # O(batch) with no periodic full-table rewrite inside
         # foreachBatch — same discipline as CdcPipeline.  The target is
@@ -288,99 +281,16 @@ class JoinCdcPipeline:
             compact_every=None,
             partition_by=["_bucket"],
         )
-        self.dlq = None
-        if self.validator is not None:
-            from hermes_spark.streaming.errorqueue import DeadLetterQueue
-
-            payload = T.StructType(
-                [f for f in JOIN_TARGET_SCHEMA.fields if f.name != "op"]
-            )
-            self.dlq = DeadLetterQueue(
-                self.spark,
-                os.path.join(self.work_dir, "dlq"),
-                key=KEY,
-                payload_schema=payload,
-                fk_map=self.fk_map,
-                foreignkeys_policy=self.foreignkeys_policy,
-            )
+        self._open_dlq(KEY, JOIN_TARGET_SCHEMA)
         self.sink = JoinCdcSink(
-            self.target, self.n_buckets,
-            prune_threshold=self.prune_threshold,
-            dlq=self.dlq, validator=self.validator,
+            self.target, self.n_buckets, dlq=self.dlq, validator=self.validator
         )
 
-    def _on_batch(self, df: DataFrame, batch_id: int) -> None:
-        self.sink(df, batch_id)
-        if (
-            self.dlq is not None
-            and self.retry_every
-            and (batch_id + 1) % self.retry_every == 0
-            # same healthy-stream fast path as CdcPipeline: no drain
-            # jobs while the queue is provably empty
-            and not self.dlq.known_empty()
-        ):
-            self.retry_queue(tag=f"b{batch_id}")
-        if self.maintain_every and (batch_id + 1) % self.maintain_every == 0:
-            self.maintain(mode="incremental")
+    def _commit_sink(self) -> ExactlyOnceSink:
+        return self.sink.inner
 
-    def retry_queue(self, tag: str | None = None, max_passes: int = 10) -> int:
-        """Scheduled error-queue drain (shared protocol — see
-        ``pipeline.drain_queue``); candidates re-apply through the
-        inner exactly-once sink, so drain merges carry lineage like
-        any other commit."""
-        if self.dlq is None:
-            return 0
-        from hermes_spark.streaming.pipeline import drain_queue
-
-        return drain_queue(
-            self.dlq, self.sink.inner, self.validator,
-            [f.name for f in JOIN_TARGET_SCHEMA.fields],
-            tag=tag, max_passes=max_passes,
-        )
-
-    def maintain(self, mode: str = "full") -> None:
-        """Out-of-band maintenance (Iceberg rewrite_data_files +
-        expire_snapshots analog): fold deltas into a fresh base, then
-        physically expire the superseded version dirs so disk stays
-        O(live state).  ``retain_superseded=1``: the generation this
-        compact superseded stays readable, so a trigger whose plan
-        listed files just before the compact does not fail mid-batch
-        (see ``CdcPipeline.maintain``).  ``mode='incremental'`` folds
-        only the delta set (O(churn)) — the in-stream
-        ``maintain_every`` cadence."""
-        if mode not in ("full", "incremental"):
-            raise ValueError(f"maintain mode must be full|incremental, got {mode!r}")
-        if mode == "incremental":
-            self.target.compact_deltas()
-        else:
-            self.target.compact()
-        self.target.vacuum(retain_superseded=1)
-
-    def source(self) -> DataFrame:
-        reader = self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.parquet(self.source_dir)
-
-    def start(self) -> StreamingQuery:
-        return (
-            self.source()
-            .writeStream.foreachBatch(self._on_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .outputMode("append")
-            .start()
-        )
-
-    def run_available(self) -> None:
-        q = self.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            try:
-                q.awaitTermination(30)
-            except Exception:
-                pass
+    def changes(self) -> DataFrame:
+        return self.source()
 
     def target_live(self) -> DataFrame:
         return (

@@ -6,8 +6,15 @@ The producer-side lifecycle of the reference
 
     file/iceberg source (micro-batch = one poll)
       → event-time watermark on ts
-      → stateful classify (insert/update/delete vs per-conv state)
+      → classify (insert/update/delete vs the state of each key)
       → foreachBatch: idempotent MERGE into target + lineage metrics
+
+``ClientLoop`` is the one implementation of the reference client loop
+around that query — validate, apply, divert failures to the error
+queue, retry on an interval, maintain — and both classifiers extend
+it: ``CdcPipeline`` (stateful ``applyInPandasWithState``, below) and
+``JoinCdcPipeline`` (JVM-only join against the target,
+streaming/cdc_join.py).
 
 Restart-from-checkpoint resumes mid-stream exactly-once (tests kill the
 query between micro-batches and assert the target equals an
@@ -18,6 +25,7 @@ run as sibling queries over the same source.
 from __future__ import annotations
 
 import os
+import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
@@ -32,80 +40,28 @@ from hermes_spark.streaming.sink import ExactlyOnceSink
 from hermes_spark.tables import ParquetMergeTable
 
 
-def drain_queue(
-    dlq, sink, validator, fields: list[str],
-    tag: str | None = None, max_passes: int = 10,
-) -> int:
-    """One scheduled error-queue drain, shared by both pipeline modes:
-    dependency-ordered candidates re-validated (NULL verdict = "no
-    opinion" = passes — a queued tombstone must not stay stuck forever
-    because a content validator NULLs out on its NULL text) and
-    applied through the sink's observed ``_apply`` under a
-    CONTENT-STABLE batch id — ``dlq-<tag>-`` plus a hash of the
-    candidate (key, offset) set — so a crash-replay whose pass
-    numbering shifted merges the NEW candidate set instead of silently
-    no-oping (see ``CdcPipeline.retry_queue``).  Empty passes commit
-    nothing; compaction runs only when a pass moved something.
-    Returns the rows left in the queue."""
-    import time
-
-    progress = {"applied": False}
-    cached: list[DataFrame] = []
-
-    def apply_fn(cands: DataFrame) -> DataFrame:
-        ok = (
-            cands.where(F.coalesce(validator(cands), F.lit(True)))
-            if validator is not None else cands
-        ).cache()
-        cached.append(ok)
-        agg = ok.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.xxhash64(
-                F.sort_array(
-                    F.collect_list(
-                        # the queue's OWN key columns — this helper is
-                        # cross-mode and must not bake in one key shape
-                        F.concat_ws("\x00", *dlq.key, "offset")
-                    )
-                )
-            ).alias("h"),
-        ).first()
-        if agg.n == 0:
-            return ok  # nothing passes — no empty commit churn
-        bid = f"dlq-{tag}-{agg.h}" if tag is not None else None
-        # through the sink's observed apply: drain merges land in the
-        # lineage/metrics surfaces like any other commit (the
-        # reference counts retried events in its status counters)
-        sink._apply(ok.select(*fields), bid, time.monotonic())
-        progress["applied"] = True
-        return ok
-
-    try:
-        left = dlq.drain(apply_fn, max_passes=max_passes)
-    finally:
-        for df in cached:
-            df.unpersist()
-    if progress["applied"]:
-        # queue compaction only when the pass moved something — an
-        # idle queue must not rewrite itself every trigger
-        dlq.maintain()
-    return left
-
-
 @dataclass
-class CdcPipeline:
+class ClientLoop:
+    """The reference client loop (clients/__init__.py:913-1020 +
+    640-755), shared by both classifiers: every micro-batch commits
+    through the sink (rows failing ``validator`` divert to a
+    dead-letter queue with per-key FIFO + FK gating), every
+    ``retry_every`` micro-batches a dependency-ordered drain pass
+    retries the queue with the same validator — transient failures
+    heal without operator intervention (errorQueue_retryInterval) —
+    and every ``maintain_every`` micro-batches the target folds its
+    deltas in-stream.
+
+    A subclass opens ``self.target`` and ``self.sink`` in its
+    ``__post_init__`` (after this one, passing the declared target
+    schema to ``_open_dlq``) and supplies ``changes()`` and
+    ``target_live()``."""
+
     spark: SparkSession
     source_dir: str          # parquet files appear here (one per micro-batch)
     work_dir: str            # checkpoint + target + metrics
-    watermark: str = "10 minutes"
     max_files_per_trigger: int | None = None
-    n_buckets: int | None = 1024  # state-key coarsening (None = per conv_id)
-    # reference client-loop wiring (clients/__init__.py:913-1020 +
-    # 640-755): rows failing ``validator`` divert to a dead-letter
-    # queue (with per-key FIFO + FK gating), and every
-    # ``retry_every`` micro-batches a dependency-ordered drain pass
-    # retries the queue with the same validator — transient failures
-    # heal without operator intervention (errorQueue_retryInterval).
+    n_buckets: int = 1024    # state-key coarsening (hash buckets of conv_id)
     validator: Callable[[DataFrame], Column] | None = None
     retry_every: int | None = None
     # FK dependency blocking for the error queue (reference
@@ -122,74 +78,32 @@ class CdcPipeline:
     # sibling readers).  Full O(table) rebasing stays out-of-band via
     # maintain(mode="full").
     maintain_every: int | None = None
-    # per-batch reshaping between classifier and commit — the client
-    # datamodel fan-out (reference clients/datamodel.py:497-621): runs
-    # inside the sink on the classified change frame, BEFORE the
-    # validator split (the validator therefore sees the transformed
-    # columns).  ``type_col``/``type_names`` feed the sink's
-    # per-objtype diff counters; ``target_schema`` overrides
-    # CHANGE_EVENT_SCHEMA when the transform reshapes the payload
-    # (the config layer computes it by analyzing the transform
-    # against an empty frame — no data runs at build time).
-    transform: Callable[[DataFrame], DataFrame] | None = None
-    type_col: str | None = None
-    type_names: "Sequence[str] | None" = None
-    target_schema: T.StructType | None = None
-    # the MERGE key.  A fan-out emits ONE event per local type for the
-    # same (conv_id, turn_idx) — the reference applies each to a
-    # distinct local object (clients/datamodel.py:497-621), so a
-    # shared target must key by (type, conv_id, turn_idx) or sibling
-    # types would overwrite each other
-    target_key: "Sequence[str]" = ("conv_id", "turn_idx")
-    # trashbin semantics (reference trashbin_purgeInterval,
-    # clients/__init__.py:757-813): "retain" keeps op='delete' rows as
-    # tombstone state — target_live() hides them, trashbin() shows
-    # them, a re-delivered row restores the key (the classifier
-    # re-inserts), and maintain(mode="full") purges tombstones older
-    # than ``tombstone_retention`` (event-time interval vs max ts)
-    tombstone_mode: str = "drop"
-    tombstone_retention: str | None = None
 
     def __post_init__(self) -> None:
         self.checkpoint = os.path.join(self.work_dir, "checkpoint")
-        schema = self.target_schema or CHANGE_EVENT_SCHEMA
-        key = list(self.target_key)
-        self.target = ParquetMergeTable(
-            self.spark,
-            os.path.join(self.work_dir, "target"),
-            key=key,
-            schema=schema,
-            tombstone_mode=self.tombstone_mode,
-            tombstone_retention=self.tombstone_retention,
-            # compaction is out-of-band for the streaming hot path: the
-            # sink commit stays O(batch) with no periodic full-table
-            # rewrite inside foreachBatch (call target.compact() from a
-            # maintenance job, exactly like Iceberg rewrite_data_files)
-            compact_every=None,
-        )
         self.dlq = None
-        if self.validator is not None:
-            from hermes_spark.streaming.errorqueue import DeadLetterQueue
 
-            payload = T.StructType(
+    def _open_dlq(self, key: list[str], schema: T.StructType) -> None:
+        """The error queue, when a validator is configured: its payload
+        is the declared target schema minus ``op``."""
+        if self.validator is None:
+            return
+        from hermes_spark.streaming.errorqueue import DeadLetterQueue
+
+        self.dlq = DeadLetterQueue(
+            self.spark,
+            os.path.join(self.work_dir, "dlq"),
+            key=key,
+            payload_schema=T.StructType(
                 [f for f in schema.fields if f.name != "op"]
-            )
-            self.dlq = DeadLetterQueue(
-                self.spark,
-                os.path.join(self.work_dir, "dlq"),
-                key=key,
-                payload_schema=payload,
-                fk_map=self.fk_map,
-                foreignkeys_policy=self.foreignkeys_policy,
-            )
-        self.sink = ExactlyOnceSink(
-            self.target,
-            transform=self.transform,
-            dlq=self.dlq,
-            validator=self.validator,
-            type_col=self.type_col,
-            type_names=self.type_names,
+            ),
+            fk_map=self.fk_map,
+            foreignkeys_policy=self.foreignkeys_policy,
         )
+
+    def _commit_sink(self) -> ExactlyOnceSink:
+        """The exactly-once sink the drain re-applies through."""
+        return self.sink
 
     # -- foreachBatch body: sink + scheduled retry ---------------------
 
@@ -214,6 +128,14 @@ class CdcPipeline:
         reference's ``errorQueue_retryInterval`` loop
         (clients/__init__.py:640-755) as a batch job.
 
+        Candidates are re-validated (NULL verdict = "no opinion" =
+        passes — a queued tombstone must not stay stuck forever
+        because a content validator NULLs out on its NULL text) and
+        applied through the exactly-once sink's observed ``_apply``, so
+        drain merges land in the lineage/metrics surfaces like any
+        other commit (the reference counts retried events in its
+        status counters).
+
         Exactly-once across a crash inside the pass: each pass's target
         merge is ledgered under a CONTENT-STABLE id — ``dlq-<tag>-``
         plus a hash of the candidate (key, offset) set — so a replay
@@ -227,18 +149,51 @@ class CdcPipeline:
         applied.  A re-applied row is also state-idempotent (the queue
         holds the key's NEWEST effective event — per-key FIFO gating
         guarantees no fresher write reached the target while the key
-        was queued).  Empty passes commit nothing.  Returns the rows
-        left in the queue."""
+        was queued).  Empty passes commit nothing; compaction runs only
+        when a pass moved something.  Returns the rows left in the
+        queue."""
         if self.dlq is None:
             return 0
-        return drain_queue(
-            self.dlq, self.sink, self.validator,
-            # the LIVE target schema, not the static default: mid-stream
-            # evolution (fanout payloads, dataschema events) must be
-            # visible to the drain's re-apply projection
-            [f.name for f in self.target.schema.fields],
-            tag=tag, max_passes=max_passes,
-        )
+        sink, dlq = self._commit_sink(), self.dlq
+        # the LIVE target schema, not the static default: mid-stream
+        # evolution (fanout payloads, dataschema events) must be
+        # visible to the drain's re-apply projection
+        fields = [f.name for f in self.target.schema.fields]
+        applied = False
+        cached: list[DataFrame] = []
+
+        def apply_fn(cands: DataFrame) -> DataFrame:
+            nonlocal applied
+            # a queue exists only with a validator
+            ok = cands.where(
+                F.coalesce(self.validator(cands), F.lit(True))
+            ).cache()
+            cached.append(ok)
+            agg = ok.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.xxhash64(
+                    F.sort_array(
+                        F.collect_list(F.concat_ws("\x00", *dlq.key, "offset"))
+                    )
+                ).alias("h"),
+            ).first()
+            if agg.n == 0:
+                return ok  # nothing passes — no empty commit churn
+            bid = f"dlq-{tag}-{agg.h}" if tag is not None else None
+            sink._apply(ok.select(*fields), bid, time.monotonic())
+            applied = True
+            return ok
+
+        try:
+            left = dlq.drain(apply_fn, max_passes=max_passes)
+        finally:
+            for df in cached:
+                df.unpersist()
+        if applied:
+            # queue compaction only when the pass moved something — an
+            # idle queue must not rewrite itself every trigger
+            dlq.maintain()
+        return left
 
     def maintain(self, mode: str = "full") -> None:
         """Out-of-band maintenance: fold target deltas into a fresh
@@ -272,11 +227,6 @@ class CdcPipeline:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         return reader.parquet(self.source_dir)
 
-    def changes(self) -> DataFrame:
-        return classify_changes(
-            self.source(), watermark=self.watermark, n_buckets=self.n_buckets
-        )
-
     def start(self) -> StreamingQuery:
         return (
             self.changes()
@@ -299,6 +249,73 @@ class CdcPipeline:
                 q.awaitTermination(30)
             except Exception:
                 pass
+
+
+@dataclass
+class CdcPipeline(ClientLoop):
+    """The client loop over the ``applyInPandasWithState`` classifier
+    (streaming/cdc.py)."""
+
+    watermark: str = "10 minutes"
+    # per-batch reshaping between classifier and commit — the client
+    # datamodel fan-out (reference clients/datamodel.py:497-621): runs
+    # inside the sink on the classified change frame, BEFORE the
+    # validator split (the validator therefore sees the transformed
+    # columns).  ``type_col``/``type_names`` feed the sink's
+    # per-objtype diff counters; ``target_schema`` overrides
+    # CHANGE_EVENT_SCHEMA when the transform reshapes the payload
+    # (the config layer computes it by analyzing the transform
+    # against an empty frame — no data runs at build time).
+    transform: Callable[[DataFrame], DataFrame] | None = None
+    type_col: str | None = None
+    type_names: "Sequence[str] | None" = None
+    target_schema: T.StructType | None = None
+    # the MERGE key.  A fan-out emits ONE event per local type for the
+    # same (conv_id, turn_idx) — the reference applies each to a
+    # distinct local object (clients/datamodel.py:497-621), so a
+    # shared target must key by (type, conv_id, turn_idx) or sibling
+    # types would overwrite each other
+    target_key: "Sequence[str]" = ("conv_id", "turn_idx")
+    # trashbin semantics (reference trashbin_purgeInterval,
+    # clients/__init__.py:757-813): "retain" keeps op='delete' rows as
+    # tombstone state — target_live() hides them, trashbin() shows
+    # them, a re-delivered row restores the key (the classifier
+    # re-inserts), and maintain(mode="full") purges tombstones older
+    # than ``tombstone_retention`` (event-time interval vs max ts)
+    tombstone_mode: str = "drop"
+    tombstone_retention: str | None = None
+
+    def __post_init__(self) -> None:
+        super().__post_init__()
+        schema = self.target_schema or CHANGE_EVENT_SCHEMA
+        key = list(self.target_key)
+        self.target = ParquetMergeTable(
+            self.spark,
+            os.path.join(self.work_dir, "target"),
+            key=key,
+            schema=schema,
+            tombstone_mode=self.tombstone_mode,
+            tombstone_retention=self.tombstone_retention,
+            # compaction is out-of-band for the streaming hot path: the
+            # sink commit stays O(batch) with no periodic full-table
+            # rewrite inside foreachBatch (call target.compact() from a
+            # maintenance job, exactly like Iceberg rewrite_data_files)
+            compact_every=None,
+        )
+        self._open_dlq(key, schema)
+        self.sink = ExactlyOnceSink(
+            self.target,
+            transform=self.transform,
+            dlq=self.dlq,
+            validator=self.validator,
+            type_col=self.type_col,
+            type_names=self.type_names,
+        )
+
+    def changes(self) -> DataFrame:
+        return classify_changes(
+            self.source(), watermark=self.watermark, n_buckets=self.n_buckets
+        )
 
     def target_live(self) -> DataFrame:
         """Current live target state.  In tombstone-retain (trashbin)

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hermes_spark.operators.ordering import with_apply_order
 from hermes_spark.tables import ParquetMergeTable
 
 # batch ids are int|str in the ledger (streaming batch numbers, but
@@ -58,34 +57,16 @@ PARTITION_METRICS_SCHEMA = T.StructType(
 )
 
 
-def _latest_change_per_key(changes: DataFrame, key: list[str]) -> DataFrame:
-    """Within one micro-batch, MERGE must see at most one row per key —
-    keep the newest classification (max ts, then op rank so a delete
-    re-delivered after an update wins deterministically)."""
-    ordered = with_apply_order(changes)
-    return (
-        ordered.groupBy(*key)
-        .agg(
-            F.max_by(
-                F.struct(*[c for c in ordered.columns if c not in key]),
-                F.struct(F.col("ts"), F.col("_op_rank")),
-            ).alias("_last")
-        )
-        .select(*key, "_last.*")
-        .drop("_op_rank")
-    )
-
-
 class ExactlyOnceSink:
-    """foreachBatch body: (optional dedupe) → idempotent MERGE with
-    observed metrics — exactly one Spark job per micro-batch."""
+    """foreachBatch body: idempotent MERGE with observed metrics —
+    exactly one Spark job per micro-batch.  The input holds at most one
+    change per key (both classifiers emit one compacted event per key
+    per batch)."""
 
     def __init__(
         self,
         target: ParquetMergeTable,
         transform: Callable[[DataFrame], DataFrame] | None = None,
-        assume_unique_keys: bool = True,
-        evolve_on_new_columns: bool = True,
         dlq=None,
         validator: Callable[[DataFrame], "F.Column"] | None = None,
         type_col: str | None = None,
@@ -105,16 +86,6 @@ class ExactlyOnceSink:
         # counted).  The type column never reaches the target schema.
         self.type_col = type_col
         self.type_names = tuple(type_names or ())
-        # the stateful classifier emits at most one compacted event per
-        # key per batch, so the per-batch dedupe shuffle is skipped by
-        # default; pass False when feeding raw (unclassified) changes.
-        self.assume_unique_keys = assume_unique_keys
-        # mid-stream schema evolution: when a batch carries columns the
-        # target doesn't know, publish a dataschema event AHEAD of the
-        # data commit and evolve the target (reference
-        # server/hermesserver.py:340-443 → clients/__init__.py:876-887).
-        # Without this the MERGE would silently drop the new columns.
-        self.evolve_on_new_columns = evolve_on_new_columns
         # the reference's client event loop (clients/__init__.py:
         # 913-1020): each event is validated/handled; failures land in
         # the error queue, and subsequent events for a queued key — or
@@ -370,20 +341,22 @@ class ExactlyOnceSink:
         sidecar: DataFrame | None = None,
         commit_info: dict | None = None,
     ) -> None:
-        if self.evolve_on_new_columns:
-            known = {f.name for f in self.target.schema.fields}
-            extra = [
-                f for f in changes.schema.fields
-                if f.name not in known and f.name != self.type_col
-            ]
-            if extra:
-                # idempotent under replay-after-crash: once evolved, the
-                # diff is empty and no duplicate event is published
-                self.target.evolve(
-                    T.StructType(list(self.target.schema.fields) + extra)
-                )
-        if not self.assume_unique_keys:
-            changes = _latest_change_per_key(changes, self.target.key)
+        # mid-stream schema evolution: when a batch carries columns the
+        # target doesn't know, publish a dataschema event AHEAD of the
+        # data commit and evolve the target (reference
+        # server/hermesserver.py:340-443 → clients/__init__.py:876-887).
+        # Without this the MERGE would silently drop the new columns.
+        known = {f.name for f in self.target.schema.fields}
+        extra = [
+            f for f in changes.schema.fields
+            if f.name not in known and f.name != self.type_col
+        ]
+        if extra:
+            # idempotent under replay-after-crash: once evolved, the
+            # diff is empty and no duplicate event is published
+            self.target.evolve(
+                T.StructType(list(self.target.schema.fields) + extra)
+            )
         obs = Observation(f"lineage_{batch_id}")
         aggs = [
             F.count(F.lit(1)).alias("rows"),

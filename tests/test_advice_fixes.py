@@ -162,17 +162,17 @@ def test_null_ts_rows_dropped_explicitly():
     """A null event time has no last-writer rank: the row is dropped
     up-front (not silently swallowed by sentinel ordering), and valid
     rows in the same batch are unaffected."""
-    from hermes_spark.streaming.cdc import _classify_group
+    from hermes_spark.streaming.cdc import _classify_bucket
 
     st = _FakeState()
     pdf = _mk_pdf([
         ("c", 0, "user", "ok", None, "2026-01-01 00:00:00", 5),
         ("c", 1, "user", "no-ts", None, None, 6),
     ])
-    out = pd.concat(list(_classify_group(("c",), iter([pdf]), st)))
+    out = pd.concat(list(_classify_bucket(("k",), iter([pdf]), st)))
     assert [(r.turn_idx, r.op) for r in out.itertuples()] == [(0, "insert")]
     # the null-ts key was not inserted into state: delivering it later
     # with a real ts still classifies as a fresh insert
     pdf2 = _mk_pdf([("c", 1, "user", "no-ts", None, "2026-01-01 00:01:00", 6)])
-    out2 = pd.concat(list(_classify_group(("c",), iter([pdf2]), st)))
+    out2 = pd.concat(list(_classify_bucket(("k",), iter([pdf2]), st)))
     assert [(r.turn_idx, r.op) for r in out2.itertuples()] == [(1, "insert")]

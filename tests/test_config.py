@@ -205,6 +205,30 @@ def test_registered_validator_accepted(spark, tmp_work):
     assert pipe.validator is not None
 
 
+@pytest.mark.parametrize("mode", ["stateful", "join"])
+@pytest.mark.parametrize("n", [0, -4])
+def test_non_positive_n_buckets_rejected_at_load(mode, n):
+    """n_buckets is a hash modulus: 0 would kill the first trigger with
+    REMAINDER_BY_ZERO, so the load must reject it, naming the key."""
+    with pytest.raises(ConfigError, match=r"pipeline\.n_buckets.*>= 1"):
+        load_config(_minimal(mode=mode, n_buckets=n))
+    assert load_config(_minimal(mode=mode, n_buckets=1))["pipeline"]["n_buckets"] == 1
+
+
+def test_n_buckets_checked_below_the_config_layer(spark):
+    """Direct callers get the same guard: the classifier and the join
+    sink refuse a non-positive or missing bucket count up-front."""
+    from hermes_spark.streaming.cdc import classify_changes
+    from hermes_spark.streaming.cdc_join import JoinCdcSink
+
+    turns = spark.createDataFrame([], "conv_id string")
+    for n in (0, -1, None):
+        with pytest.raises(ValueError, match="n_buckets"):
+            classify_changes(turns, n_buckets=n)
+        with pytest.raises(ValueError, match="n_buckets"):
+            JoinCdcSink(target=None, n_buckets=n)
+
+
 def test_fk_policy_needs_edges():
     with pytest.raises(ConfigError, match="foreignkeys"):
         load_config(_minimal(foreignkeys_policy="on_remove_event"))

@@ -100,7 +100,7 @@ def test_persistent_failure_queue_and_disk_bounded(spark, actions):
 
             # the persistent failure: every candidate fails again; the
             # operational loop re-enqueues them with the fresh error
-            # (pipeline.drain_queue keeps failures with updated err)
+            # (the pipeline's retry_queue keeps failures with updated err)
             def all_fail(cands):
                 failed = cands.withColumn("err", F.format_string("retry %d failed", F.lit(tag)))
                 if not failed.isEmpty():

@@ -182,8 +182,10 @@ def test_adaptive_pruning_equivalence_and_switch(spark, tmp_work):
         spark, f"{tmp_work}/tb", key=KEY, schema=JOIN_TARGET_SCHEMA,
         tombstone_mode="retain", compact_every=None, partition_by=["_bucket"],
     )
-    always_prune = JoinCdcSink(t_a, N_BUCKETS, prune_threshold=2.0)
-    adaptive = JoinCdcSink(t_b, N_BUCKETS, prune_threshold=0.5)
+    always_prune = JoinCdcSink(t_a, N_BUCKETS)
+    always_prune.PRUNE_THRESHOLD = 2.0
+    adaptive = JoinCdcSink(t_b, N_BUCKETS)
+    assert adaptive.PRUNE_THRESHOLD == 0.5
 
     # batch 0: dense (many convs → touches ~all buckets)
     dense = []
@@ -259,7 +261,9 @@ def test_adaptive_pruning_property(spark, tmp_work):
                 schema=JOIN_TARGET_SCHEMA, tombstone_mode="retain",
                 compact_every=None, partition_by=["_bucket"],
             )
-            sinks[mode] = (t, JoinCdcSink(t, 4, prune_threshold=thr))
+            sink = JoinCdcSink(t, 4)
+            sink.PRUNE_THRESHOLD = thr
+            sinks[mode] = (t, sink)
         for i, rows in enumerate(batches):
             data = [
                 (f"c{c}", ti, "u", tx, None, base + dt.timedelta(seconds=s))

@@ -381,3 +381,65 @@ def test_ngram_prefix_via_sorted_array_matches_window_ranking(spark, docs):
         F.col("_r") <= F.col("sz") - F.ceil(F.col("sz") * threshold - 1e-9) + 1
     ).select("doc_id", "sh")
     assert _rows(pref_new) == _rows(pref_old)
+
+
+@pytest.mark.parametrize("op", ["brute_force", "ivf"])
+def test_topk_preselect_keeps_tied_duplicates(spark, op):
+    """More duplicates of the nearest vector than the k+20 preselect
+    depth: the duplicates score a few ulps apart in the batch matmul,
+    and the true top-k are the duplicates with the SMALLEST ids
+    (cosine DESC, neighbor_id ASC).  An arbitrary cut among the
+    near-ties drops them; the result must equal the all-pairs plan."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from hermes_spark.functions.similarity import (
+        _dot,
+        _norm,
+        brute_force_topk,
+        ivf_topk,
+    )
+
+    rng = np.random.default_rng(7)
+    dim, n_dup, k = 64, 400, 5
+    dup = rng.normal(size=dim)
+    noise = rng.normal(size=(300, dim))
+    # duplicates get the LARGEST-first arrival order, so a positional
+    # cut keeps the wrong ones
+    rows = [(int(5000 - i), dup.tolist()) for i in range(n_dup)]
+    rows += [(int(10000 + i), noise[i].tolist()) for i in range(len(noise))]
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+    ])
+    emb = spark.createDataFrame(rows, schema).repartition(2)
+    qvec = (dup + 1e-3 * rng.normal(size=dim)).tolist()
+    queries = spark.createDataFrame(
+        [(1, qvec), (2, dup.tolist())], "query_id long, embedding array<double>"
+    )
+
+    v = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v")
+    )
+    q = queries.select("query_id", F.col("embedding").alias("q"))
+    scored = v.crossJoin(q).withColumn(
+        "cosine",
+        _dot(F.col("q"), F.col("v")) / (_norm(F.col("q")) * _norm(F.col("v"))),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    naive = (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cosine")
+    )
+    if op == "brute_force":
+        got = brute_force_topk(emb, queries, k=k)
+    else:
+        # one list, probed by every query: the IVF candidate set is the
+        # whole corpus, so the all-pairs plan is its oracle
+        got = ivf_topk(emb, queries, dim=dim, k=k, n_lists=1, n_probe=1)
+    exp = _rows(naive)
+    assert [r[2] for r in exp] == [4601, 4602, 4603, 4604, 4605] * 2
+    assert _rows(got) == exp
