@@ -1,12 +1,12 @@
 """IcebergTable — the cluster-side twin of ``ParquetMergeTable``.
 
-Same call surface — ``read(op_col, columns, partition_filter)`` /
+Same call surface — ``read(op_col, columns)`` /
 ``merge(changes, batch_id, op_col, commit_info, sidecar)`` /
 ``overwrite`` / ``compact`` / ``vacuum`` / ``evolve`` /
 ``dataschema_events`` / ``annotate_commit`` / ``migrate_key`` /
 ``purge_columns`` / ``committed_batch_ids`` / ``version_of_batch`` /
 ``read_sidecar`` — backed by a real Iceberg catalog, so the engine's
-pipelines (``JoinCdcPipeline``'s bucket-pruned state fold,
+pipelines (``JoinCdcPipeline``'s narrow state read,
 ``ExactlyOnceSink``'s two-ledger DLQ protocol) run unchanged against
 either class.  The mapping:
 
@@ -19,10 +19,9 @@ either class.  The mapping:
   ``.snapshots`` metadata table).  Batch ids are compared as STRINGS on
   both write and read — the sink uses ids like ``"sink-3"``.
 * ``partition_by`` accepts identity columns (``"_bucket"``) or Iceberg
-  transform specs verbatim (``"bucket(32, conv_id)"``); a
-  ``partition_filter`` on the partition source columns prunes files
-  natively (Iceberg metadata pruning — the analog of the local twin's
-  hive-dir pruning).
+  transform specs verbatim (``"bucket(32, conv_id)"``); writes
+  hash-distribute on the partition spec, the analog of the local
+  twin's hive-dir layout.
 * ``compact`` → ``rewrite_data_files``; ``vacuum`` →
   ``expire_snapshots``; ``evolve`` → ``ALTER TABLE ADD COLUMNS`` plus a
   ``hermes.dataschema.N`` table property (the published event);
@@ -257,18 +256,13 @@ class IcebergTable:
         self,
         op_col: str | None = "op",
         columns: Sequence[str] | None = None,
-        partition_filter: Column | None = None,
     ) -> DataFrame:
         """Current state.  ``columns`` prunes the scan (must include
-        the key, same contract as the local twin); ``partition_filter``
-        is a predicate over the partition source columns — Iceberg
-        prunes files from it natively, so no manual dir listing is
-        needed.  In ``tombstone_mode='drop'`` the MERGE already deleted
-        the rows; in 'retain' they are present with op='delete' and the
-        caller filters, exactly like the local twin's retain mode."""
+        the key, same contract as the local twin).  In
+        ``tombstone_mode='drop'`` the MERGE already deleted the rows; in
+        'retain' they are present with op='delete' and the caller
+        filters, exactly like the local twin's retain mode."""
         df = self.spark.read.table(self.identifier)
-        if partition_filter is not None:
-            df = df.where(partition_filter)
         if columns is not None:
             missing = [k for k in self.key if k not in columns]
             if missing:

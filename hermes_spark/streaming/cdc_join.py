@@ -12,8 +12,9 @@ are columnar parquet scans that never leave the JVM.
 
 ``JoinCdcPipeline`` is the shared client loop (``pipeline.ClientLoop``:
 validate, apply, error queue, scheduled retry, maintenance) over the
-RAW source stream — ``JoinCdcSink`` classifies each batch itself and
-commits through the same ``ExactlyOnceSink`` the stateful mode uses.
+RAW source stream.  ``JoinCdcSink`` is an ``ExactlyOnceSink`` whose
+``transform`` is the classification, so both modes share one sink: one
+replay probe, one error-queue split, one lineage observation.
 
 Semantics are identical (last-writer-by-event-time, stale suppression,
 tombstone memory) — the equivalence test drives both pipelines over
@@ -23,11 +24,10 @@ Scale model: the target is hive-partitioned on a hash bucket of
 conv_id (Iceberg ``bucket(N, conv_id)`` partition-spec analog) and
 writes hash-distribute on the bucket (write.distribution-mode=hash →
 ~1 file per bucket per delta, no tiny-file explosion).  Per
-micro-batch the state read prunes to the buckets the batch touches
-(file-level pruning) AND to the (key, op, ts, cks64) columns (the
-wide payload stays on disk) — read amplification is O(touched state),
-not O(table).  Compaction is out-of-band (``maintain()``), keeping
-the foreachBatch commit O(batch): one classify-join + one MERGE, no
+micro-batch the state read is the whole fold pruned to the
+(key, op, ts, cks64) columns — the wide payload stays on disk.
+Compaction is out-of-band (``maintain()``), keeping the foreachBatch
+commit O(batch + narrow state): one classify-join + one MERGE, no
 periodic full-table rewrite in the hot path.
 """
 
@@ -36,7 +36,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,9 +65,8 @@ JOIN_STATE_SCHEMA = T.StructType(
 KEY = ["conv_id", "turn_idx"]
 
 # bucket-partitioned target: JOIN_STATE_SCHEMA plus the hash-bucket
-# partition column — a micro-batch reads ONLY the buckets it touches
-# (Iceberg bucket-partition-spec analog), so per-batch state read
-# amplification is O(state of touched buckets), not O(table)
+# partition column (Iceberg bucket-partition-spec analog) — each delta
+# writes ~1 file per touched bucket
 JOIN_TARGET_SCHEMA = T.StructType(
     [*JOIN_STATE_SCHEMA.fields, T.StructField("_bucket", T.IntegerType(), False)]
 )
@@ -86,33 +85,14 @@ def _rank(ts_col, tomb_col, cks_col):
     )
 
 
-class JoinCdcSink:
-    """foreachBatch body: dedupe-in-batch → classify via join → write
-    delta (tombstones retained as op='delete' rows = state memory).
-
-    When the target is bucket-partitioned (the default pipeline
-    wiring), the batch's touched buckets are computed once (a tiny
-    distinct over the deduped, cached batch) and the state fold prunes
-    to those hive partitions — O(touched state) per batch instead of a
-    groupBy over the whole base+deltas.  One table, one ledger, one
-    MERGE per batch: replay-under-crash stays the single-commit
-    idempotency argument.
-
-    Adaptive pruning: computing the touched-bucket list costs a second
-    driver action (distinct+collect over the persisted batch) that is
-    pure overhead once batches are dense — a high-throughput stream
-    touches every bucket every trigger, so the "pruned" read lists the
-    same files anyway.  The sink therefore tracks how many buckets the
-    PREVIOUS batch touched via an Observation riding the merge job
-    (zero extra jobs) and skips the collect — one job per batch, no
-    persist — while the stream stays dense (≥ ``PRUNE_THRESHOLD`` of
-    the buckets); a sparse batch flips it back to the pruned fold.
-    Dense and sparse regimes each get their optimal plan without any
-    per-batch measurement cost."""
-
-    # fraction of buckets above which the touched-bucket collect is
-    # skipped; 0 disables pruning entirely, >1 forces it always
-    PRUNE_THRESHOLD = 0.5
+class JoinCdcSink(ExactlyOnceSink):
+    """The exactly-once sink whose ``transform`` is the join
+    classification: in-batch last writer per key → left join against
+    the narrow target state (key, op, ts, cks64 — the wide payload
+    stays on disk) → op truth table.  Tombstones are written as
+    op='delete' rows, which are the state memory.  Replay, the error
+    queue split and lineage are ``ExactlyOnceSink``'s, unchanged: one
+    table, one ledger, one MERGE per batch."""
 
     def __init__(
         self,
@@ -123,34 +103,12 @@ class JoinCdcSink:
     ) -> None:
         if n_buckets is None or n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
-        self.target = target
         self.n_buckets = n_buckets
-        self.bucketed = bool(
-            target.partition_by and "_bucket" in target.partition_by
+        super().__init__(
+            target, transform=self._classify, dlq=dlq, validator=validator
         )
-        self._last_touched: int | None = None
-        # the COMMIT goes through the shared exactly-once sink: the
-        # classified rows are this mode's change events, so validator
-        # diversion, per-key FIFO + FK gating, the persisted-split
-        # two-ledger protocol, and per-batch lineage annotation apply
-        # identically to both classifiers — one implementation of the
-        # reference client loop, not two
-        self.inner = ExactlyOnceSink(target, dlq=dlq, validator=validator)
-        self.dlq = dlq
 
-    def __call__(self, turns: DataFrame, batch_id: int) -> None:
-        # the two-ledger replay probe is the inner sink's — ONE
-        # implementation of the id scheme and membership test
-        t_done, q_done = self.inner.ledger_state(batch_id)
-        if t_done and q_done:
-            # replay no-op — but the batch plan must still run so any
-            # upstream stateful operator commits its state stores
-            # (Spark 4 validates this and fails the batch otherwise)
-            turns.count()
-            return
-        # t_done without q_done (crash between the two commits): fall
-        # through — the inner sink re-enqueues the persisted split; the
-        # classification join runs once as the replay's count() driver
+    def _classify(self, turns: DataFrame) -> DataFrame:
         b = with_content_cksum(turns)
         tomb = F.col("text").isNull()
         b = b.withColumn("_tomb", tomb).withColumn(
@@ -163,38 +121,9 @@ class JoinCdcSink:
             .agg(F.max_by(F.struct(*payload), F.col("_rank")).alias("_w"))
             .select(*KEY, "_w.*")
         )
-
-        cached = None
-        state_cols = ["conv_id", "turn_idx", "op", "ts", "cks64"]
-        if self.bucketed:
-            b = b.withColumn(
-                "_bucket", bucket_of(F.col("conv_id"), self.n_buckets)
-            )
-            dense = (
-                self._last_touched is not None
-                and self._last_touched >= self.PRUNE_THRESHOLD * self.n_buckets
-            )
-            if dense:
-                # dense stream: every bucket is (almost) touched — the
-                # pruned fold would list the same files, so skip the
-                # collect and the persist entirely: ONE job this batch
-                state_src = self.target.read(columns=state_cols)
-            else:
-                cached = b.persist()
-                touched = [
-                    r[0] for r in b.select("_bucket").distinct().collect()
-                ]
-                # state = pruned fold of the target: only touched bucket
-                # partitions are listed/scanned, and only the narrow
-                # classification columns are decoded
-                state_src = self.target.read(
-                    columns=state_cols,
-                    partition_filter=F.col("_bucket").isin(touched),
-                )
-        else:
-            # unpartitioned fallback: column pruning only
-            state_src = self.target.read(columns=state_cols)
-        state = state_src.select(
+        state = self.target.read(
+            columns=["conv_id", "turn_idx", "op", "ts", "cks64"]
+        ).select(
             F.col("conv_id").alias("s_conv_id"),
             F.col("turn_idx").alias("s_turn_idx"),
             F.col("op").alias("s_op"),
@@ -222,40 +151,15 @@ class JoinCdcSink:
             .when(F.col("cks64") != F.col("s_cks64"), F.lit("update"))
             .otherwise(F.coalesce(F.col("s_op"), F.lit("insert")))  # content unchanged → advance ts, keep op
         )
-        extra = ["_bucket"] if self.bucketed else []
-        out = (
-            j.where(fresh)
-            .select(
-                *KEY,
-                op.alias("op"),
-                "role", "text", "tool", "ts", "cksum", "cks64",
-                *extra,
-            )
+        # every classified row (incl. tombstones) lands as the key's new
+        # state version; nothing is physically dropped here — live vs
+        # deleted is a view predicate, purged on compaction+retention
+        return j.where(fresh).select(
+            *KEY,
+            op.alias("op"),
+            "role", "text", "tool", "ts", "cksum", "cks64",
+            bucket_of(F.col("conv_id"), self.n_buckets).alias("_bucket"),
         )
-        # MERGE: every classified row (incl. tombstones) lands as the
-        # key's new state version; nothing is physically dropped here —
-        # live vs deleted is a view predicate, purged on compaction+retention.
-        obs = None
-        if self.bucketed:
-            # density telemetry rides the merge job (no extra action):
-            # it decides whether the NEXT batch bothers pruning
-            obs = Observation(f"join_touched_{batch_id}")
-            out = out.observe(
-                obs, F.approx_count_distinct("_bucket").alias("nb")
-            )
-        try:
-            self.inner(out, batch_id)
-            if obs is not None:
-                try:
-                    self._last_touched = int(obs.get["nb"] or 0)
-                except Exception:
-                    # an all-stale batch writes an EMPTY delta — zero
-                    # tasks run, so the metrics row never materializes;
-                    # treat it as a sparse signal (prune next batch)
-                    self._last_touched = 0
-        finally:
-            if cached is not None:
-                cached.unpersist()
 
 
 @dataclass
@@ -270,8 +174,8 @@ class JoinCdcPipeline(ClientLoop):
         # compaction is out-of-band (maintain()): the sink commit stays
         # O(batch) with no periodic full-table rewrite inside
         # foreachBatch — same discipline as CdcPipeline.  The target is
-        # bucket-partitioned so the per-batch state fold prunes to the
-        # touched buckets.
+        # bucket-partitioned so delta writes hash-distribute on the
+        # bucket (~1 file per bucket per delta).
         self.target = ParquetMergeTable(
             self.spark,
             os.path.join(self.work_dir, "target"),
@@ -285,9 +189,6 @@ class JoinCdcPipeline(ClientLoop):
         self.sink = JoinCdcSink(
             self.target, self.n_buckets, dlq=self.dlq, validator=self.validator
         )
-
-    def _commit_sink(self) -> ExactlyOnceSink:
-        return self.sink.inner
 
     def changes(self) -> DataFrame:
         return self.source()

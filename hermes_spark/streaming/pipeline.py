@@ -101,10 +101,6 @@ class ClientLoop:
             foreignkeys_policy=self.foreignkeys_policy,
         )
 
-    def _commit_sink(self) -> ExactlyOnceSink:
-        """The exactly-once sink the drain re-applies through."""
-        return self.sink
-
     # -- foreachBatch body: sink + scheduled retry ---------------------
 
     def _on_batch(self, df: DataFrame, batch_id: int) -> None:
@@ -154,7 +150,7 @@ class ClientLoop:
         queue."""
         if self.dlq is None:
             return 0
-        sink, dlq = self._commit_sink(), self.dlq
+        sink, dlq = self.sink, self.dlq
         # the LIVE target schema, not the static default: mid-stream
         # evolution (fanout payloads, dataschema events) must be
         # visible to the drain's re-apply projection

@@ -131,22 +131,14 @@ class ExactlyOnceSink:
         except Exception:
             return None
 
-    def ledger_state(self, batch_id) -> tuple[bool, bool]:
-        """(target committed, queue closed) for this batch — THE
-        two-ledger replay probe, exposed so wrapping sinks (the join
-        classifier's fast path) share one implementation of the id
-        scheme and the format-neutral membership test instead of
-        duplicating the protocol."""
+    def __call__(self, changes: DataFrame, batch_id: int) -> None:
+        t0 = time.monotonic()
+        # THE two-ledger replay probe: target committed, queue closed
         t_done = self._in_ledger(batch_id, self.target.committed_batch_ids())
         q_done = (
             self.dlq is None
             or f"sink-{batch_id}" in self.dlq.table.committed_batch_ids()
         )
-        return t_done, q_done
-
-    def __call__(self, changes: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        t_done, q_done = self.ledger_state(batch_id)
         if t_done:
             # replayed batch: the MERGE will no-op, but the batch plan
             # must still execute end-to-end — Spark validates that
@@ -184,9 +176,7 @@ class ExactlyOnceSink:
         if not t_done:
             if self.transform is not None:
                 changes = self.transform(changes)
-            if self.dlq.known_empty() and getattr(
-                self.target, "commit_info_of_batch", None
-            ) is not None:
+            if self.dlq.known_empty():
                 self._apply_inline_split(changes, batch_id, t0, q_done)
                 return
             # persist the classified batch: the split produces THREE
@@ -227,11 +217,7 @@ class ExactlyOnceSink:
                 else:
                     self.dlq.enqueue(persisted, batch_id=f"sink-{batch_id}")
                 return
-            info = (
-                self.target.commit_info_of_batch(batch_id)
-                if getattr(self.target, "commit_info_of_batch", None)
-                is not None else None
-            )
+            info = self.target.commit_info_of_batch(batch_id)
             if (info or {}).get("split") == "inline":
                 # the original commit took the fast path: the split was
                 # validator-only (queue empty, gating skipped) and is
@@ -398,8 +384,7 @@ class ExactlyOnceSink:
                 # PARTITIONED target the repartition-by-bucket write
                 # runs ZERO tasks, the metrics row never materializes,
                 # and obs.get raises deep in py4j — the batch applied
-                # nothing, so every counter is zero (same guard as the
-                # join sink's density observation).  Zero-fill is gated
+                # nothing, so every counter is zero.  Zero-fill is gated
                 # on the delta ACTUALLY being empty where the table can
                 # show us (local version dirs): swallowing a real
                 # observation failure on a non-empty batch would

@@ -24,10 +24,12 @@ On a real cluster the class is swapped for Iceberg `MERGE INTO`
 configured) with identical call signatures — engine code never
 branches on the format.
 
-Scale note: this local emulation rewrites the table per commit (fine at
-test scale); Iceberg's merge-on-read makes the same operation
-O(changed files).  The *logical* plan — changes anti-join target on
-pkey, union — is what the engine owns and is format-independent.
+Scale note: a commit writes only the batch's change rows as a delta
+snapshot (merge-on-read, O(batch)); ``read()`` folds base + deltas
+latest-per-key, and ``compact``/``compact_deltas`` bound that fold
+out-of-band — the same shape as Iceberg's merge-on-read row-level
+operations plus ``rewrite_data_files``.  The *logical* plan is what
+the engine owns and is format-independent.
 """
 
 from __future__ import annotations
@@ -73,9 +75,9 @@ class ParquetMergeTable:
         self.schema = schema
         self.compact_every = compact_every
         # hive-style partition columns on every snapshot (Iceberg
-        # partition-spec analog): a read with a ``partition_filter`` on
-        # these columns prunes FILES, not just row groups — the basis of
-        # the join-mode CDC bucketed state index
+        # partition-spec analog): writes hash-distribute on them, so a
+        # snapshot holds ~1 file per partition value (the join-mode CDC
+        # target partitions on its conv_id hash bucket)
         self.partition_by = list(partition_by) if partition_by else None
         # "drop": op='delete' rows vanish on read/compaction (plain
         # target).  "retain": tombstone rows survive as state memory
@@ -399,7 +401,6 @@ class ParquetMergeTable:
         self,
         op_col: str | None = "op",
         columns: Sequence[str] | None = None,
-        partition_filter: Column | None = None,
     ) -> DataFrame:
         """Current state: base ⊎ deltas, latest-per-key wins; op delete
         drops the key unless tombstone_mode='retain' (the merge-on-read
@@ -408,12 +409,7 @@ class ParquetMergeTable:
         ``columns``: prune the fold to these columns (must include the
         key) — the per-key max_by struct then carries only them, so the
         parquet scans never decode the wide payload (join-mode CDC
-        reads state as (key, op, ts, cks64) without touching text).
-
-        ``partition_filter``: a predicate over ``partition_by`` columns
-        applied to every snapshot scan BEFORE the fold — prunes whole
-        files (hive partition dirs), so a micro-batch that touches k of
-        n buckets reads k/n of the state."""
+        reads state as (key, op, ts, cks64) without touching text)."""
         if self.tombstone_mode == "retain":
             op_col = None  # tombstone rows are kept as state memory
         base, deltas = self._live_commits()
@@ -429,20 +425,16 @@ class ParquetMergeTable:
         if base is None and not deltas:
             return self.spark.createDataFrame([], self.schema)
 
-        def _pruned(df: DataFrame) -> DataFrame:
-            return df.where(partition_filter) if partition_filter is not None else df
-
         parts = []
         if base is not None:
             parts.append(
-                _pruned(self._snapshot_scan(base["version"]))
+                self._snapshot_scan(base["version"])
                 .select(*fields)
                 .withColumn("_seq", F.lit(0))
                 .withColumn("_del", F.lit(False))
             )
         for i, d in enumerate(deltas):
             raw, extra_op = self._delta_scan(d)
-            raw = _pruned(raw)
             if extra_op and op_col is not None and op_col not in fields:
                 dele = F.col(extra_op) == "delete"
             elif op_col in fields:

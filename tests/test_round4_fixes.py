@@ -47,9 +47,9 @@ def test_empty_partitioned_delta_keeps_table_readable(spark, tmp_work):
     assert 1 in t.committed_batch_ids()
     # …and every read shape still works
     assert sorted(r.id for r in t.read().collect()) == [1, 2]
-    assert [r.id for r in t.read(
-        columns=["id", "v"], partition_filter=F.col("_bucket") == 1
-    ).collect()] == [2]
+    assert sorted(
+        (r.id, r._bucket) for r in t.read(columns=["id", "_bucket"]).collect()
+    ) == [(1, 0), (2, 1)]
     # and the table still accepts subsequent batches
     t.merge(spark.createDataFrame([(3, "c", 0, "insert")], ddl), batch_id=2)
     assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
