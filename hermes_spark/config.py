@@ -22,7 +22,7 @@ caller would::
         mode: stateful                  # stateful | join
         watermark: "10 minutes"
         max_files_per_trigger: 1
-        n_buckets: 1024
+        n_buckets: 128                  # optional; pinned per checkpoint
         validator: {expr: "coalesce(length(text) <= 4096, true)"}
         retry_every: 4                  # errorQueue_retryInterval
         maintain_every: 8               # in-stream incremental compact
@@ -272,10 +272,7 @@ def load_config(source) -> dict:
         "work_dir": _typed(p, p_path, "work_dir", str),
         "watermark": _typed(p, p_path, "watermark", str, default="10 minutes"),
         "max_files_per_trigger": _typed(p, p_path, "max_files_per_trigger", int),
-        "n_buckets": _typed(
-            p, p_path, "n_buckets", int,
-            default=1024 if mode == "stateful" else 32,
-        ),
+        "n_buckets": _typed(p, p_path, "n_buckets", int),
         "retry_every": _typed(p, p_path, "retry_every", int),
         "maintain_every": _typed(p, p_path, "maintain_every", int),
         "foreignkeys_policy": _typed(
@@ -994,13 +991,16 @@ def build_pipeline(spark: SparkSession, config, **overrides):
         source_dir=pcfg["source"],
         work_dir=pcfg["work_dir"],
         max_files_per_trigger=pcfg["max_files_per_trigger"],
-        n_buckets=pcfg["n_buckets"],
         validator=validator,
         retry_every=pcfg["retry_every"],
         fk_map=pcfg["fk_map"],
         foreignkeys_policy=pcfg["foreignkeys_policy"],
         maintain_every=pcfg["maintain_every"],
     )
+    # unset: each mode's own default (stateful derives and pins its
+    # count at start, join partitions the target 32 ways)
+    if pcfg["n_buckets"] is not None:
+        common["n_buckets"] = pcfg["n_buckets"]
     if mode == "join":
         if pcfg["tombstone_mode"] != "drop":
             raise ConfigError(

@@ -49,6 +49,14 @@ Design for 10^12 turns — the hot path is *binary + vectorized*:
   vectorized truth table); no per-row Python anywhere.
 * Buckets whose state did not change skip ``state.update`` entirely —
   idle buckets pay the read, never the write.
+* Each touched bucket is one Python call per micro-batch, and the
+  operator itself (Arrow slicing, state pickling, the JVM state
+  lookup) costs about 0.5 ms per call whatever the bucket holds; a
+  touched bucket also rewrites its whole blob.  ``CdcPipeline`` sizes
+  the count from the shuffle-partition count (32 per partition) and
+  pins it in the checkpoint, because the bucket IS the state key: a
+  resume with another count would find no state for most keys
+  (streaming/pipeline.py::pin_n_buckets).
 """
 
 from __future__ import annotations
@@ -330,13 +338,18 @@ def with_cks64(turns: DataFrame) -> DataFrame:
 def classify_changes(
     turns: DataFrame,
     watermark: str | None = "10 minutes",
-    n_buckets: int = 1024,
+    *,
+    n_buckets: int,
 ) -> DataFrame:
     """Streaming DataFrame of turns → change-event stream.
 
     ``n_buckets``: state-key coarsening factor — the state is keyed by
-    ``xxhash64(conv_id) mod n_buckets`` (semantics do not depend on
-    it; ``n_buckets=1`` puts every conversation in one state row).
+    ``xxhash64(conv_id) mod n_buckets``, one Python call per touched
+    bucket per micro-batch (``n_buckets=1`` puts every conversation in
+    one state row).  Semantics do not depend on the count, but a
+    checkpoint's state does: pass the same count on every resume
+    (``CdcPipeline`` resolves and records it, pipeline.py::
+    pin_n_buckets).
     The final target state is delivery-order-independent (last-writer
     by event time), so any micro-batch grouping of the same input
     yields the same target — the batch oracle is last-writer per key.

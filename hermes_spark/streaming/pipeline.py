@@ -18,12 +18,16 @@ streaming/cdc_join.py).
 
 Restart-from-checkpoint resumes mid-stream exactly-once (tests kill the
 query between micro-batches and assert the target equals an
-uninterrupted run).  Windowed snapshot queries and the tool-call join
-run as sibling queries over the same source.
+uninterrupted run).  The stateful classifier keys its state by hash
+bucket, so ``CdcPipeline`` pins its bucket count in the checkpoint
+(``pin_n_buckets``): a resume with another count would re-key the
+state and let stale deliveries through.  Windowed snapshot queries and
+the tool-call join run as sibling queries over the same source.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from collections.abc import Callable, Sequence
@@ -38,6 +42,60 @@ from hermes_spark.schema import CHANGE_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
 from hermes_spark.streaming.cdc import classify_changes
 from hermes_spark.streaming.sink import ExactlyOnceSink
 from hermes_spark.tables import ParquetMergeTable
+
+# stateful classifier buckets per shuffle partition (128 at local[4]).
+# Each touched bucket is one grouped-state Python call per trigger
+# (~0.5 ms of operator cost, whatever it holds) and rewrites its whole
+# state blob.  At ~1M live turns on 4 vCPUs, 8 per partition was the
+# slowest on 125-row triggers and 256 the slowest on 8750-row ones.
+BUCKETS_PER_SHUFFLE_PARTITION = 32
+
+
+def pin_n_buckets(spark: SparkSession, checkpoint: str, n_buckets: int | None) -> int:
+    """The classifier's bucket count for ``checkpoint``, recorded there.
+
+    The state is keyed by ``xxhash64(conv_id) mod n_buckets``, so the
+    count is part of the checkpoint exactly like Spark's own
+    ``spark.sql.shuffle.partitions`` in the offset log: resuming with
+    another count would look every conversation up in the wrong
+    bucket, finding no state, and a stale delivery would re-apply.
+
+    * a record exists → it is used; an explicit ``n_buckets`` that
+      differs raises ``ValueError`` naming both counts;
+    * no record, fresh checkpoint → ``n_buckets``, else
+      ``BUCKETS_PER_SHUFFLE_PARTITION × spark.sql.shuffle.partitions``,
+      recorded before the query starts;
+    * no record but committed batches (a checkpoint started before the
+      record existed) → only an explicit ``n_buckets`` is accepted
+      (and recorded): the count it ran with cannot be known."""
+    if n_buckets is not None and n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
+    path = os.path.join(checkpoint, "n_buckets.json")
+    if os.path.exists(path):
+        with open(path) as f:
+            recorded = json.load(f)["n_buckets"]
+        if n_buckets not in (None, recorded):
+            raise ValueError(
+                f"n_buckets={n_buckets} conflicts with n_buckets={recorded} "
+                f"recorded in {path}: the classifier state is keyed by "
+                "bucket, so a checkpoint cannot change its count"
+            )
+        return recorded
+    if n_buckets is None:
+        commits = os.path.join(checkpoint, "commits")
+        if os.path.isdir(commits) and any(n.isdigit() for n in os.listdir(commits)):
+            raise ValueError(
+                f"checkpoint {checkpoint} has committed batches but no "
+                "n_buckets record: pass the n_buckets it was started with"
+            )
+        n_buckets = BUCKETS_PER_SHUFFLE_PARTITION * int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        )
+    os.makedirs(checkpoint, exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        json.dump({"n_buckets": n_buckets}, f)
+    os.replace(path + ".tmp", path)
+    return n_buckets
 
 
 @dataclass
@@ -61,7 +119,10 @@ class ClientLoop:
     source_dir: str          # parquet files appear here (one per micro-batch)
     work_dir: str            # checkpoint + target + metrics
     max_files_per_trigger: int | None = None
-    n_buckets: int = 1024    # state-key coarsening (hash buckets of conv_id)
+    # hash buckets of conv_id: the stateful classifier's state key
+    # (None = pinned at start(), see pin_n_buckets) or the join
+    # target's partition column
+    n_buckets: int | None = None
     validator: Callable[[DataFrame], Column] | None = None
     retry_every: int | None = None
     # FK dependency blocking for the error queue (reference
@@ -250,7 +311,8 @@ class ClientLoop:
 @dataclass
 class CdcPipeline(ClientLoop):
     """The client loop over the ``applyInPandasWithState`` classifier
-    (streaming/cdc.py)."""
+    (streaming/cdc.py).  ``n_buckets`` resolves when a query first
+    starts (``pin_n_buckets``); after that it holds the pinned count."""
 
     watermark: str = "10 minutes"
     # per-batch reshaping between classifier and commit — the client
@@ -308,6 +370,10 @@ class CdcPipeline(ClientLoop):
             type_names=self.type_names,
         )
 
+    def start(self) -> StreamingQuery:
+        self.n_buckets = pin_n_buckets(self.spark, self.checkpoint, self.n_buckets)
+        return super().start()
+
     def changes(self) -> DataFrame:
         return classify_changes(
             self.source(), watermark=self.watermark, n_buckets=self.n_buckets
@@ -342,7 +408,8 @@ class CdcPipeline(ClientLoop):
         over the *classified change stream* (watermarked) — the
         north-rule 'reconstructing ordered conversation snapshots'
         queries, runnable as sibling streaming queries sharing the
-        source."""
+        source.  Needs a resolved ``n_buckets``: ``start_windowed``
+        pins it in the sibling's own checkpoint."""
         from hermes_spark.operators.windows import (
             session_snapshots,
             sliding_snapshots,
@@ -369,6 +436,9 @@ class CdcPipeline(ClientLoop):
     def start_windowed(
         self, out_dir: str, kind: str = "tumbling", **kw
     ) -> StreamingQuery:
+        # the sibling query runs a classifier of its own, with state in
+        # its own checkpoint: pinned the same way, to the same count
+        self.n_buckets = pin_n_buckets(self.spark, out_dir + "_ck", self.n_buckets)
         return (
             self.windowed_snapshots(kind=kind, **kw)
             .writeStream.format("parquet")

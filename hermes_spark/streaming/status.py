@@ -11,7 +11,7 @@ layers:
   ledger with ZERO extra jobs (``ExactlyOnceSink`` Observation);
 * this module adds the LIVE view: a ``StreamingQueryListener``
   capturing every trigger's progress (rows/s, batch wall, state-store
-  rows, watermark) into a bounded in-memory ring plus an optional
+  rows and bytes, watermark) into a bounded in-memory ring plus an optional
   JSONL file — the process-level status endpoint;
 * ``PipelineStatus.status()`` folds both into one dict, the analog of
   the reference's CLI ``status`` verb.
@@ -35,6 +35,11 @@ def _progress_row(p) -> dict:
     """Flatten a StreamingQueryProgress into the fields the reference's
     status surface shows (counts, rates, phase timings, state size)."""
     state = p.stateOperators or []
+
+    def custom(name: str) -> int:
+        # RocksDB provider metrics; absent under another provider
+        return sum(int((s.customMetrics or {}).get(name, 0)) for s in state)
+
     return {
         "event": "progress",
         "query_id": str(p.id),
@@ -47,6 +52,12 @@ def _progress_row(p) -> dict:
         "duration_ms": dict(p.durationMs or {}),
         "state_rows_total": sum(s.numRowsTotal for s in state),
         "state_rows_updated": sum(s.numRowsUpdated for s in state),
+        # state size: rows count grouped-state keys (hash buckets for
+        # the stateful classifier), bytes show what the state holds and
+        # what this trigger rewrote
+        "state_memory_bytes": sum(s.memoryUsedBytes for s in state),
+        "state_sst_bytes": custom("rocksdbSstFileSize"),
+        "state_bytes_written": custom("rocksdbTotalBytesWritten"),
         "watermark": (p.eventTime or {}).get("watermark"),
     }
 

@@ -215,6 +215,26 @@ def test_non_positive_n_buckets_rejected_at_load(mode, n):
     assert load_config(_minimal(mode=mode, n_buckets=1))["pipeline"]["n_buckets"] == 1
 
 
+@pytest.mark.parametrize("mode", ["stateful", "join"])
+def test_unset_n_buckets_builds_each_mode(spark, tmp_work, mode):
+    """No mode-dependent default at load: unset, the stateful pipeline
+    derives its count when it first starts (32 per shuffle partition,
+    pinned in the checkpoint) and the join pipeline keeps its 32."""
+    from hermes_spark.streaming.pipeline import pin_n_buckets
+
+    assert load_config(_minimal(mode=mode))["pipeline"]["n_buckets"] is None
+    pipe = build_pipeline(
+        spark, _minimal(mode=mode),
+        source=os.path.join(tmp_work, "s"),
+        work_dir=os.path.join(tmp_work, "w"),
+    )
+    if mode == "join":
+        assert pipe.n_buckets == 32 and pipe.sink.n_buckets == 32
+    else:
+        assert pipe.n_buckets is None
+        assert pin_n_buckets(spark, pipe.checkpoint, pipe.n_buckets) == 128
+
+
 def test_n_buckets_checked_below_the_config_layer(spark):
     """Direct callers get the same guard: the classifier and the join
     sink refuse a non-positive or missing bucket count up-front."""

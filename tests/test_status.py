@@ -59,6 +59,13 @@ def test_status_listener_and_ledger_fold(spark, tmp_work):
         dp = _data_progress()
         assert dp is not None and dp["num_input_rows"] == 30
         assert dp["duration_ms"].get("triggerExecution", 0) > 0
+        # state size, summed over the state operators: 30 rows of two
+        # conversations land in at most two buckets, which the trigger
+        # wrote to the RocksDB store
+        assert 1 <= dp["state_rows_total"] <= 2
+        assert dp["state_memory_bytes"] > 0
+        assert dp["state_bytes_written"] > 0
+        assert dp["state_sst_bytes"] >= 0
         assert s["sustained_rows_per_sec"] is None or s["sustained_rows_per_sec"] > 0
         # the JSONL audit file parses line-by-line and carries the
         # started + progress lifecycle

@@ -8,6 +8,8 @@ initial sync counts, incremental add/modify/remove, exact dataset
 equality between producer and consumer sides).
 """
 
+import datetime as dt
+import json
 import os
 
 import pyspark.sql.functions as F
@@ -63,6 +65,11 @@ def test_stream_matches_batch_oracle(spark, tmp_work, batches, n_buckets):
     kw = {} if n_buckets is None else {"n_buckets": n_buckets}
     pipe = CdcPipeline(spark, src, os.path.join(tmp_work, "run1"), **kw)
     pipe.run_available()
+    # unset: 32 buckets per shuffle partition (the suite runs 4),
+    # recorded next to the checkpoint
+    assert pipe.n_buckets == (n_buckets or 128)
+    with open(os.path.join(pipe.checkpoint, "n_buckets.json")) as f:
+        assert json.load(f) == {"n_buckets": pipe.n_buckets}
     got = pipe.target_live().select("conv_id", "turn_idx", "text")
 
     exp = _expected_final_state(spark, pdfs).select("conv_id", "turn_idx", "text")
@@ -105,6 +112,51 @@ def test_resume_from_checkpoint_equals_uninterrupted(spark, tmp_work, batches):
     a = uninterrupted.target_live().select("conv_id", "turn_idx", "text", "cksum")
     b = pipe2.target_live().select("conv_id", "turn_idx", "text", "cksum")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_resume_keeps_the_recorded_bucket_count(spark, tmp_work):
+    """The classifier state is keyed by bucket: a checkpoint resumed with
+    another ``n_buckets`` would look most conversations up in a bucket
+    with no state, and an older delivery arriving after the restart
+    would overwrite the newer text.  The count is recorded at the first
+    start; a conflicting one is refused before any batch runs."""
+    t1 = dt.datetime(2026, 1, 1, 0, 1)
+    t0 = t1 - dt.timedelta(minutes=1)  # older, but inside the watermark
+    src = os.path.join(tmp_work, "src")
+    work = os.path.join(tmp_work, "run")
+
+    def deliver(text, ts):
+        rows = [(f"c{i:02d}", 0, "user", f"{text}-{i}", None, ts) for i in range(20)]
+        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def texts(pipe):
+        return sorted(r.text for r in pipe.target_live().select("text").collect())
+
+    newer = sorted(f"new-{i}" for i in range(20))
+    deliver("new", t1)
+    CdcPipeline(spark, src, work, n_buckets=4).run_available()
+    deliver("old", t0)  # stale re-delivery of every key, after the stop
+
+    pipe = CdcPipeline(spark, src, work, n_buckets=8)
+    version = pipe.target.current_version()
+    with pytest.raises(ValueError, match="n_buckets=8 conflicts with n_buckets=4"):
+        pipe.start()
+    assert pipe.target.current_version() == version and texts(pipe) == newer
+
+    pipe = CdcPipeline(spark, src, work)
+    pipe.run_available()
+    assert pipe.n_buckets == 4 and texts(pipe) == newer
+
+    # a checkpoint from before the record: only an explicit count resumes
+    record = os.path.join(pipe.checkpoint, "n_buckets.json")
+    os.remove(record)
+    with pytest.raises(ValueError, match="no n_buckets record"):
+        CdcPipeline(spark, src, work).start()
+    CdcPipeline(spark, src, work, n_buckets=4).run_available()
+    with open(record) as f:
+        assert json.load(f) == {"n_buckets": 4}
 
 
 def test_replayed_batch_is_noop(spark, tmp_work, batches):
