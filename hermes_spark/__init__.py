@@ -18,6 +18,7 @@ Spark cluster at 10^12-turn scale (partitioned state, salted skew handling,
 broadcast dims, checkpointed offsets).
 """
 
+from hermes_spark import zipcache
 from hermes_spark.config import (
     ConfigError,
     build_pipeline,
@@ -25,6 +26,11 @@ from hermes_spark.config import (
     register_validator,
 )
 from hermes_spark.session import build_session
+
+# Python workers import this package while unpickling their first task;
+# from then on each task's importlib.invalidate_caches() skips the
+# unchanged pyspark.zip instead of re-reading its directory
+zipcache.install()
 
 __all__ = [
     "build_session",

@@ -6,6 +6,10 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from hermes_spark.schema import TRANSCRIPT_SCHEMA
 from hermes_spark.streaming.pipeline import CdcPipeline
@@ -20,15 +24,57 @@ def _rows(conv, n, t0="2026-01-01 00:00:00"):
     ]
 
 
+def _write_one_row_files(rows, src):
+    """One parquet file per row, written with pyarrow (no Spark job)."""
+    os.makedirs(src)
+    arrow_schema = pa.schema(
+        [
+            ("conv_id", pa.string()),
+            ("turn_idx", pa.int32()),
+            ("role", pa.string()),
+            ("text", pa.string()),
+            ("tool", pa.string()),
+            ("ts", pa.timestamp("us", tz="UTC")),
+        ]
+    )
+    # naive datetimes land as UTC, as the session reads them
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, row)) for row in rows], schema=arrow_schema
+    )
+    for i in range(len(rows)):
+        pq.write_table(table.slice(i, 1), f"{src}/part-{i:03d}.parquet")
+
+
+def _stage_task_counts(spark, run_id):
+    """Task count of every stage of the jobs a streaming run started."""
+    tracker = spark.sparkContext.statusTracker()
+    counts = []
+    for job_id in tracker.getJobIdsForGroup(run_id):
+        job = tracker.getJobInfo(job_id)
+        for stage_id in job.stageIds if job else ():
+            stage = tracker.getStageInfo(stage_id)
+            if stage:
+                counts.append(stage.numTasks)
+    return counts
+
+
 def test_status_listener_and_ledger_fold(spark, tmp_work):
+    # 40 one-row files in one trigger: more than the 32 paths above
+    # which Spark's default lists the trigger's files with a job of one
+    # task per file
     src = f"{tmp_work}/src"
-    spark.createDataFrame(
-        _rows("a", 20) + _rows("b", 10), TRANSCRIPT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(src)
+    _write_one_row_files(_rows("a", 25) + _rows("b", 15), src)
     pipe = CdcPipeline(spark, src, f"{tmp_work}/run")
     st = attach_status(pipe, path=f"{tmp_work}/status.jsonl")
     try:
-        pipe.run_available()
+        q = pipe.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+        counts = _stage_task_counts(spark, str(q.runId))
+        assert counts and 40 not in counts, counts
         # the listener bus is async — progress events land shortly
         # after processAllAvailable returns
         import time
@@ -43,7 +89,7 @@ def test_status_listener_and_ledger_fold(spark, tmp_work):
             hits = [
                 e
                 for e in evts
-                if e["event"] == "progress" and e["num_input_rows"] == 30
+                if e["event"] == "progress" and e["num_input_rows"] == 40
             ]
             return hits[-1] if hits else None
 
@@ -52,14 +98,14 @@ def test_status_listener_and_ledger_fold(spark, tmp_work):
                 break
             time.sleep(0.2)
         s = st.status()
-        assert s["applied"]["inserts"] == 30
+        assert s["applied"]["inserts"] == 40
         assert s["applied"]["commits"] >= 1
         lp = s["last_trigger"]
         assert lp is not None
         dp = _data_progress()
-        assert dp is not None and dp["num_input_rows"] == 30
+        assert dp is not None and dp["num_input_rows"] == 40
         assert dp["duration_ms"].get("triggerExecution", 0) > 0
-        # state size, summed over the state operators: 30 rows of two
+        # state size, summed over the state operators: 40 rows of two
         # conversations land in at most two buckets, which the trigger
         # wrote to the RocksDB store
         assert 1 <= dp["state_rows_total"] <= 2
