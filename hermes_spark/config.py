@@ -22,7 +22,7 @@ caller would::
         mode: stateful                  # stateful | join
         watermark: "10 minutes"
         max_files_per_trigger: 1
-        n_buckets: 128                  # optional; pinned per checkpoint
+        n_buckets: 128                  # stateful only; optional, pinned per checkpoint
         validator: {expr: "coalesce(length(text) <= 4096, true)"}
         retry_every: 4                  # errorQueue_retryInterval
         maintain_every: 8               # in-stream incremental compact
@@ -94,6 +94,17 @@ VALIDATORS: dict[str, Callable[[DataFrame], Any]] = {}
 
 def register_validator(name: str, fn: Callable[[DataFrame], Any]) -> None:
     VALIDATORS[name] = fn
+
+
+def _refuse_join_n_buckets(mode: str, n_buckets: int | None) -> None:
+    """``n_buckets`` keys the stateful classifier's state; the join
+    classifier's state is the target table, which has no buckets."""
+    if mode == "join" and n_buckets is not None:
+        raise ConfigError(
+            "hermes-spark.pipeline.n_buckets",
+            "only meaningful with mode: stateful — the join mode keeps "
+            "its state in the target table, which has no buckets",
+        )
 
 
 # -- tiny schema walker --------------------------------------------------------
@@ -282,6 +293,7 @@ def load_config(source) -> dict:
     }
     if not isinstance(p["source"], str) or not isinstance(p["work_dir"], str):
         raise ConfigError(p_path, "source and work_dir must be strings")
+    _refuse_join_n_buckets(mode, pipeline["n_buckets"])
     for k in (
         "retry_every", "maintain_every", "max_files_per_trigger", "n_buckets"
     ):
@@ -997,10 +1009,8 @@ def build_pipeline(spark: SparkSession, config, **overrides):
         foreignkeys_policy=pcfg["foreignkeys_policy"],
         maintain_every=pcfg["maintain_every"],
     )
-    # unset: each mode's own default (stateful derives and pins its
-    # count at start, join partitions the target 32 ways)
-    if pcfg["n_buckets"] is not None:
-        common["n_buckets"] = pcfg["n_buckets"]
+    # an override can set n_buckets on a join config
+    _refuse_join_n_buckets(mode, pcfg["n_buckets"])
     if mode == "join":
         if pcfg["tombstone_mode"] != "drop":
             raise ConfigError(
@@ -1015,6 +1025,8 @@ def build_pipeline(spark: SparkSession, config, **overrides):
             tuple(key_specs) if key_specs else ("conv_id", "turn_idx")
         )
         pipe = CdcPipeline(
+            # unset: derived and pinned when the query first starts
+            n_buckets=pcfg["n_buckets"],
             watermark=pcfg["watermark"],
             transform=transform,
             type_col=type_col,

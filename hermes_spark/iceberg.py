@@ -18,10 +18,11 @@ either class.  The mapping:
   ``hermes.batch-id`` string entry per commit, read back from the
   ``.snapshots`` metadata table).  Batch ids are compared as STRINGS on
   both write and read — the sink uses ids like ``"sink-3"``.
-* ``partition_by`` accepts identity columns (``"_bucket"``) or Iceberg
+* ``partition_by`` accepts identity columns (``"region"``) or Iceberg
   transform specs verbatim (``"bucket(32, conv_id)"``); writes
-  hash-distribute on the partition spec, the analog of the local
-  twin's hive-dir layout.
+  hash-distribute on the partition spec.  It is Iceberg DDL only: the
+  local twin writes flat snapshots, because no engine read selects by
+  partition.
 * ``compact`` → ``rewrite_data_files``; ``vacuum`` →
   ``expire_snapshots``; ``evolve`` → ``ALTER TABLE ADD COLUMNS`` plus a
   ``hermes.dataschema.N`` table property (the published event);
@@ -95,7 +96,7 @@ def create_table_sql(
     partition_by: Sequence[str] | None = None,
 ) -> str:
     """CREATE TABLE IF NOT EXISTS with an optional partition spec.
-    ``partition_by`` entries are identity columns (``"_bucket"``) or
+    ``partition_by`` entries are identity columns (``"region"``) or
     Iceberg transforms verbatim (``"bucket(32, conv_id)"``,
     ``"days(ts)"``) — the spec language of the Iceberg DDL itself."""
     cols = ", ".join(

@@ -20,10 +20,11 @@ Semantics are identical (last-writer-by-event-time, stale suppression,
 tombstone memory) — the equivalence test drives both pipelines over
 the same reordered input and asserts identical live state.
 
-Scale model: the target is hive-partitioned on a hash bucket of
-conv_id (Iceberg ``bucket(N, conv_id)`` partition-spec analog) and
-writes hash-distribute on the bucket (write.distribution-mode=hash →
-~1 file per bucket per delta, no tiny-file explosion).  Per
+Scale model: each delta is one flat parquet snapshot written straight
+from the classify plan — one file per post-shuffle partition of the
+classify join, so at most ``spark.sql.shuffle.partitions`` files
+whatever the input's task count.  There is no partition layout and no
+write-side shuffle, because nothing reads the target by partition.  Per
 micro-batch the state read is the whole fold pruned to the
 (key, op, ts, cks64) columns — the wide payload stays on disk.
 Compaction is out-of-band (``maintain()``), keeping the foreachBatch
@@ -64,17 +65,6 @@ JOIN_STATE_SCHEMA = T.StructType(
 
 KEY = ["conv_id", "turn_idx"]
 
-# bucket-partitioned target: JOIN_STATE_SCHEMA plus the hash-bucket
-# partition column (Iceberg bucket-partition-spec analog) — each delta
-# writes ~1 file per touched bucket
-JOIN_TARGET_SCHEMA = T.StructType(
-    [*JOIN_STATE_SCHEMA.fields, T.StructField("_bucket", T.IntegerType(), False)]
-)
-
-
-def bucket_of(conv_col, n_buckets: int):
-    return F.pmod(F.xxhash64(conv_col), F.lit(n_buckets)).cast("int")
-
 
 def _rank(ts_col, tomb_col, cks_col):
     """Last-writer rank (ts_us, cks-or--inf) — identical tie rules to
@@ -95,15 +85,8 @@ class JoinCdcSink(ExactlyOnceSink):
     table, one ledger, one MERGE per batch."""
 
     def __init__(
-        self,
-        target: ParquetMergeTable,
-        n_buckets: int = 32,
-        dlq=None,
-        validator=None,
+        self, target: ParquetMergeTable, dlq=None, validator=None
     ) -> None:
-        if n_buckets is None or n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
-        self.n_buckets = n_buckets
         super().__init__(
             target, transform=self._classify, dlq=dlq, validator=validator
         )
@@ -158,7 +141,6 @@ class JoinCdcSink(ExactlyOnceSink):
             *KEY,
             op.alias("op"),
             "role", "text", "tool", "ts", "cksum", "cks64",
-            bucket_of(F.col("conv_id"), self.n_buckets).alias("_bucket"),
         )
 
 
@@ -167,33 +149,26 @@ class JoinCdcPipeline(ClientLoop):
     """The client loop over the JVM-only join classifier: the sink
     classifies the raw source batch itself."""
 
-    n_buckets: int = 32
-
     def __post_init__(self) -> None:
         super().__post_init__()
         # compaction is out-of-band (maintain()): the sink commit stays
         # O(batch) with no periodic full-table rewrite inside
-        # foreachBatch — same discipline as CdcPipeline.  The target is
-        # bucket-partitioned so delta writes hash-distribute on the
-        # bucket (~1 file per bucket per delta).
+        # foreachBatch — same discipline as CdcPipeline
         self.target = ParquetMergeTable(
             self.spark,
             os.path.join(self.work_dir, "target"),
             key=KEY,
-            schema=JOIN_TARGET_SCHEMA,
+            schema=JOIN_STATE_SCHEMA,
             tombstone_mode="retain",
             compact_every=None,
-            partition_by=["_bucket"],
         )
-        self._open_dlq(KEY, JOIN_TARGET_SCHEMA)
+        self._open_dlq(KEY, JOIN_STATE_SCHEMA)
         self.sink = JoinCdcSink(
-            self.target, self.n_buckets, dlq=self.dlq, validator=self.validator
+            self.target, dlq=self.dlq, validator=self.validator
         )
 
     def changes(self) -> DataFrame:
         return self.source()
 
     def target_live(self) -> DataFrame:
-        return (
-            self.target.read().where(F.col("op") != "delete").drop("_bucket")
-        )
+        return self.target.read().where(F.col("op") != "delete")

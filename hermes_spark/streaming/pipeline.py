@@ -119,10 +119,6 @@ class ClientLoop:
     source_dir: str          # parquet files appear here (one per micro-batch)
     work_dir: str            # checkpoint + target + metrics
     max_files_per_trigger: int | None = None
-    # hash buckets of conv_id: the stateful classifier's state key
-    # (None = pinned at start(), see pin_n_buckets) or the join
-    # target's partition column
-    n_buckets: int | None = None
     validator: Callable[[DataFrame], Column] | None = None
     retry_every: int | None = None
     # FK dependency blocking for the error queue (reference
@@ -314,6 +310,9 @@ class CdcPipeline(ClientLoop):
     (streaming/cdc.py).  ``n_buckets`` resolves when a query first
     starts (``pin_n_buckets``); after that it holds the pinned count."""
 
+    # hash buckets of conv_id: the classifier's state key (None =
+    # pinned at start(), see pin_n_buckets)
+    n_buckets: int | None = None
     watermark: str = "10 minutes"
     # per-batch reshaping between classifier and commit — the client
     # datamodel fan-out (reference clients/datamodel.py:497-621): runs

@@ -104,32 +104,15 @@ class ExactlyOnceSink:
         undetected on the cluster twin."""
         return batch_id in ids or str(batch_id) in ids
 
-    def _delta_is_empty(self, committed) -> bool | None:
-        """True/False when the committed delta's data files can be
-        inspected driver-side (local version dirs), None when the
-        table format cannot show us (Iceberg snapshot ids) — callers
-        treat None as best-effort."""
-        import os
-
-        vd = getattr(self.target, "_version_dir", None)
-        if vd is None:
-            # Iceberg target: merge() returns an int ONLY when the
-            # MERGE created a snapshot, i.e. the delta changed rows —
-            # an empty MERGE returns the "batch-<id>" string marker.
-            # An int therefore PROVES the delta was non-empty, so a
-            # real Observation failure must propagate instead of
-            # zero-filling lineage counters for an applied batch.
-            return False if isinstance(committed, int) else None
-        if not isinstance(committed, int):
-            return None
-        try:
-            path = vd(committed)
-            for _root, _dirs, files in os.walk(path):
-                if any(f.endswith(".parquet") for f in files):
-                    return False
-            return True
-        except Exception:
-            return None
+    @staticmethod
+    def _delta_is_empty(committed) -> bool | None:
+        """False when the commit PROVES the delta was written by a job
+        that ran (so its Observation must exist), None when it cannot
+        tell — callers treat None as best-effort.  A local table
+        commits every delta as an int version; an Iceberg MERGE returns
+        an int only when it created a snapshot, and the "batch-<id>"
+        string marker when it changed nothing."""
+        return False if isinstance(committed, int) else None
 
     def __call__(self, changes: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
@@ -276,21 +259,17 @@ class ExactlyOnceSink:
         )
         if q_done:
             return
-        try:
-            n_bad = dict(obs.get).get("bad", 0) or 0
-        except Exception:
-            # zero-task delta write (all-stale batch on a partitioned
-            # target) — the observation never materialized; decide
-            # with an explicit probe instead
-            n_bad = None
-        if n_bad == 0:
-            self.dlq.table.mark_batch(f"sink-{batch_id}")
-            return
-        bad = self._validator_failures(changes)
-        if n_bad is None and bad.isEmpty():
+        # the failure count rides the delta write, which always runs
+        # tasks on a local table.  Should the observation still be
+        # missing, obs.get raises and the trigger fails with the commit
+        # line already carrying ``split: inline``: the replay recomputes
+        # the split (``__call__``'s committed-target branch)
+        if (dict(obs.get).get("bad", 0) or 0) == 0:
             self.dlq.table.mark_batch(f"sink-{batch_id}")
         else:
-            self.dlq.enqueue(bad, batch_id=f"sink-{batch_id}")
+            self.dlq.enqueue(
+                self._validator_failures(changes), batch_id=f"sink-{batch_id}"
+            )
 
     def _split_failures(self, changes: DataFrame):
         """Reference client loop (clients/__init__.py:913-1020): rows
@@ -380,16 +359,14 @@ class ExactlyOnceSink:
             try:
                 got = dict(obs.get)
             except Exception:
-                # an all-stale batch writes an EMPTY delta; on a
-                # PARTITIONED target the repartition-by-bucket write
-                # runs ZERO tasks, the metrics row never materializes,
-                # and obs.get raises deep in py4j — the batch applied
-                # nothing, so every counter is zero.  Zero-fill is gated
-                # on the delta ACTUALLY being empty where the table can
-                # show us (local version dirs): swallowing a real
-                # observation failure on a non-empty batch would
-                # silently under-report applied work in every metrics
-                # surface.
+                # the metrics row never materialized: the write ran zero
+                # tasks.  A micro-batch's delta write on a local table
+                # always runs tasks (no test reaches this branch there);
+                # an Iceberg MERGE that changed nothing may not, and its
+                # commit is the string marker — every counter is zero.
+                # An int commit ran a real write: swallowing its
+                # observation failure would silently under-report
+                # applied work in every metrics surface.
                 if self._delta_is_empty(committed) is False:
                     raise
                 got = {}

@@ -67,18 +67,12 @@ class ParquetMergeTable:
         compact_every: int | None = 8,
         tombstone_mode: str = "drop",
         tombstone_retention: str | None = None,  # SQL interval, e.g. "30 days"
-        partition_by: Sequence[str] | None = None,
     ) -> None:
         self.spark = spark
         self.path = path
         self.key = list(key)
         self.schema = schema
         self.compact_every = compact_every
-        # hive-style partition columns on every snapshot (Iceberg
-        # partition-spec analog): writes hash-distribute on them, so a
-        # snapshot holds ~1 file per partition value (the join-mode CDC
-        # target partitions on its conv_id hash bucket)
-        self.partition_by = list(partition_by) if partition_by else None
         # "drop": op='delete' rows vanish on read/compaction (plain
         # target).  "retain": tombstone rows survive as state memory
         # (target-as-state mode; purge via retention policy).
@@ -310,16 +304,19 @@ class ParquetMergeTable:
         self, version: int, schema: T.StructType | None = None
     ) -> DataFrame:
         """Scan one snapshot dir — ALWAYS with an explicit schema,
-        never inferred from footers.  This is what makes an EMPTY
-        snapshot readable: a partitioned write of zero rows produces a
-        dir with only _SUCCESS, and schema inference over it raises
-        UNABLE_TO_INFER_SCHEMA, bricking every subsequent read (an
-        all-stale micro-batch is a normal event under re-delivery).
-        Schema-on-read also conforms old snapshots for free: columns
-        missing from the files (pre-evolution snapshots) come back
-        NULL, and columns dropped from the schema are ignored.  The
-        ONE place the scan discipline lives — base, delta, and fold
-        reads all come through here."""
+        never inferred from footers.  This is what makes a snapshot
+        dir without data files readable: schema inference over a dir
+        holding only _SUCCESS raises UNABLE_TO_INFER_SCHEMA, bricking
+        every subsequent read (an all-stale micro-batch is a normal
+        event under re-delivery).  Schema-on-read also conforms old
+        snapshots for free: columns missing from the files
+        (pre-evolution snapshots) come back NULL, and columns dropped
+        from the schema are ignored.  Snapshots written as hive
+        ``_bucket=N/`` dirs (the join-mode layout before the target
+        dropped its bucket column) read too: partition discovery
+        appends ``_bucket``, and every caller selects the schema's
+        columns.  The ONE place the scan discipline lives — base,
+        delta, and fold reads all come through here."""
         return self.spark.read.schema(schema or self.schema).parquet(
             self._version_dir(version)
         )
@@ -383,17 +380,7 @@ class ParquetMergeTable:
         return self.read_sidecar(v) if v is not None else None
 
     def _write_snapshot(self, df: DataFrame, cols: Sequence[str], out: str) -> None:
-        df = df.select(list(cols))
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            # hash-distribute on the partition columns before the write
-            # (Iceberg write.distribution-mode=hash): each partition dir
-            # gets ~1 file per snapshot instead of one per task — tiny-
-            # file/footer explosion is the classic merge-on-read killer
-            w = df.repartition(
-                *[F.col(c) for c in self.partition_by]
-            ).write.mode("overwrite").partitionBy(*self.partition_by)
-        w.parquet(out)
+        df.select(list(cols)).write.mode("overwrite").parquet(out)
 
     # -- read ----------------------------------------------------------
 

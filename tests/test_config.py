@@ -209,7 +209,16 @@ def test_registered_validator_accepted(spark, tmp_work):
 @pytest.mark.parametrize("n", [0, -4])
 def test_non_positive_n_buckets_rejected_at_load(mode, n):
     """n_buckets is a hash modulus: 0 would kill the first trigger with
-    REMAINDER_BY_ZERO, so the load must reject it, naming the key."""
+    REMAINDER_BY_ZERO, so the load must reject it, naming the key.  It
+    keys the stateful classifier's state only: join mode refuses any
+    value."""
+    if mode == "join":
+        for value in (n, 1):
+            with pytest.raises(
+                ConfigError, match=r"pipeline\.n_buckets.*mode: stateful"
+            ):
+                load_config(_minimal(mode=mode, n_buckets=value))
+        return
     with pytest.raises(ConfigError, match=r"pipeline\.n_buckets.*>= 1"):
         load_config(_minimal(mode=mode, n_buckets=n))
     assert load_config(_minimal(mode=mode, n_buckets=1))["pipeline"]["n_buckets"] == 1
@@ -219,34 +228,39 @@ def test_non_positive_n_buckets_rejected_at_load(mode, n):
 def test_unset_n_buckets_builds_each_mode(spark, tmp_work, mode):
     """No mode-dependent default at load: unset, the stateful pipeline
     derives its count when it first starts (32 per shuffle partition,
-    pinned in the checkpoint) and the join pipeline keeps its 32."""
+    pinned in the checkpoint); the join pipeline has no bucket count,
+    and an override cannot give it one."""
     from hermes_spark.streaming.pipeline import pin_n_buckets
 
     assert load_config(_minimal(mode=mode))["pipeline"]["n_buckets"] is None
-    pipe = build_pipeline(
-        spark, _minimal(mode=mode),
-        source=os.path.join(tmp_work, "s"),
-        work_dir=os.path.join(tmp_work, "w"),
+    kw = dict(
+        source=os.path.join(tmp_work, "s"), work_dir=os.path.join(tmp_work, "w")
     )
+    pipe = build_pipeline(spark, _minimal(mode=mode), **kw)
     if mode == "join":
-        assert pipe.n_buckets == 32 and pipe.sink.n_buckets == 32
+        assert not hasattr(pipe, "n_buckets")
+        assert not hasattr(pipe.sink, "n_buckets")
+        with pytest.raises(ConfigError, match=r"pipeline\.n_buckets"):
+            build_pipeline(spark, _minimal(mode=mode), n_buckets=8, **kw)
     else:
         assert pipe.n_buckets is None
         assert pin_n_buckets(spark, pipe.checkpoint, pipe.n_buckets) == 128
 
 
-def test_n_buckets_checked_below_the_config_layer(spark):
-    """Direct callers get the same guard: the classifier and the join
-    sink refuse a non-positive or missing bucket count up-front."""
+def test_n_buckets_checked_below_the_config_layer(spark, tmp_work):
+    """Direct callers get the same guard: the classifier and the
+    checkpoint pin refuse a non-positive or missing bucket count
+    up-front."""
     from hermes_spark.streaming.cdc import classify_changes
-    from hermes_spark.streaming.cdc_join import JoinCdcSink
+    from hermes_spark.streaming.pipeline import pin_n_buckets
 
     turns = spark.createDataFrame([], "conv_id string")
     for n in (0, -1, None):
         with pytest.raises(ValueError, match="n_buckets"):
             classify_changes(turns, n_buckets=n)
+    for n in (0, -1):
         with pytest.raises(ValueError, match="n_buckets"):
-            JoinCdcSink(target=None, n_buckets=n)
+            pin_n_buckets(spark, os.path.join(tmp_work, "ck"), n)
 
 
 def test_fk_policy_needs_edges():

@@ -66,7 +66,7 @@ def test_create_table_sql_with_bucket_spec():
         "(conv_id string, turn_idx int, ts timestamp) USING iceberg "
         "PARTITIONED BY (bucket(32, conv_id))"
     )
-    # identity partition column (the JoinCdcPipeline _bucket spec)
+    # identity partition column
     assert create_table_sql("c.d.t", schema, ["_bucket"]).endswith(
         "PARTITIONED BY (_bucket)"
     )

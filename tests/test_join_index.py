@@ -1,7 +1,8 @@
-"""Join-mode CDC bucket-partitioned target: column pruning of the
-per-batch state fold, hash-distributed delta writes (no tiny-file
-explosion), flat per-batch wall with out-of-band maintenance, and the
-shared exactly-once sink's replay paths on this classifier."""
+"""Join-mode CDC target: column pruning of the per-batch state fold,
+a per-delta file count bounded by the shuffle partitions (no tiny-file
+explosion), flat per-batch wall with out-of-band maintenance, resume
+over the older bucket-partitioned layout, and the shared exactly-once
+sink's replay paths on this classifier."""
 
 from __future__ import annotations
 
@@ -11,23 +12,16 @@ import time
 from pyspark.sql import functions as F
 
 from hermes_spark.schema import TRANSCRIPT_SCHEMA
-from hermes_spark.streaming.cdc_join import (
-    JOIN_TARGET_SCHEMA,
-    KEY,
-    JoinCdcSink,
-    bucket_of,
-)
+from hermes_spark.streaming.cdc_join import JOIN_STATE_SCHEMA, KEY, JoinCdcSink
 from hermes_spark.tables import ParquetMergeTable
-
-N_BUCKETS = 8
 
 
 def _mk(spark, tmp_work):
     target = ParquetMergeTable(
-        spark, f"{tmp_work}/target", key=KEY, schema=JOIN_TARGET_SCHEMA,
-        tombstone_mode="retain", compact_every=None, partition_by=["_bucket"],
+        spark, f"{tmp_work}/target", key=KEY, schema=JOIN_STATE_SCHEMA,
+        tombstone_mode="retain", compact_every=None,
     )
-    return target, JoinCdcSink(target, N_BUCKETS)
+    return target, JoinCdcSink(target)
 
 
 def _batch(spark, rows):
@@ -58,40 +52,20 @@ def test_state_fold_prunes_columns(spark, tmp_work):
 
 
 def test_hash_distributed_writes_bound_file_count(spark, tmp_work):
-    """Each delta snapshot must hold ~1 parquet file per touched bucket
-    (Iceberg write.distribution-mode=hash), not one per task — tiny
-    files are the merge-on-read footer-parsing killer."""
+    """A delta snapshot holds at most one parquet file per shuffle
+    partition of the classify join, however many tasks the input had —
+    tiny files are the merge-on-read footer-parsing killer — and it is
+    flat: no partition dirs."""
     target, sink = _mk(spark, tmp_work)
     rows = []
     for c in range(24):
         rows += _rows(f"conv-{c}", 4, "v1")
     sink(_batch(spark, rows).repartition(16), 0)  # many input tasks
     vdir = target._version_dir(1)
-    n_files = sum(
-        1
-        for root, _d, files in os.walk(vdir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    assert n_files <= N_BUCKETS, n_files
-
-
-def test_bucket_of_matches_written_partitions(spark, tmp_work):
-    """The _bucket column the classifier computes must be the bucket
-    the row is physically stored under (pruning correctness)."""
-    target, sink = _mk(spark, tmp_work)
-    sink(_batch(spark, _rows("x", 3, "v1") + _rows("y", 3, "v1")), 0)
-    got = {
-        (r.conv_id, r._bucket)
-        for r in target.read().select("conv_id", "_bucket").collect()
-    }
-    want = {
-        (r.conv_id, r.b)
-        for r in spark.createDataFrame([("x",), ("y",)], "conv_id string")
-        .select("conv_id", bucket_of(F.col("conv_id"), N_BUCKETS).alias("b"))
-        .collect()
-    }
-    assert got == want
+    entries = os.listdir(vdir)
+    assert not [e for e in entries if os.path.isdir(os.path.join(vdir, e))]
+    n_files = sum(1 for e in entries if e.endswith(".parquet"))
+    assert 1 <= n_files <= int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def test_join_mode_flat_wall_with_growing_table(spark, tmp_work):
@@ -164,6 +138,77 @@ def test_join_mode_resume_with_midstream_maintenance(spark, tmp_work):
     assert b.where("conv_id = 'c1' and op = 'update'").count() == 3
 
 
+def test_join_resume_over_bucket_partitioned_layout(spark, tmp_work):
+    """A work dir from before the target dropped its ``_bucket`` column
+    — deltas under hive ``_bucket=N/`` dirs, ``_bucket`` in the
+    ledger's create record — resumes: the next batch classifies against
+    the old rows, and the live target equals the last-writer oracle
+    before and after both maintenance modes fold the two layouts."""
+    import datetime as dt
+    import json
+    import shutil
+
+    from hermes_spark.streaming.cdc_join import JoinCdcPipeline
+
+    t0 = dt.datetime(2026, 1, 1)
+
+    def row(conv, idx, text, minutes):
+        return (conv, idx, "user", text, None, t0 + dt.timedelta(minutes=minutes))
+
+    b0 = [row(f"c{c}", i, f"v1-{c}-{i}", c) for c in range(6) for i in range(3)]
+    b1 = [
+        row("c0", 0, "v2", 60),       # newer: update
+        row("c1", 0, "stale", -60),   # older than the stored row: dropped
+        row("c2", 1, None, 60),       # tombstone
+        row("c9", 0, "new", 60),      # insert
+    ]
+    src, work = f"{tmp_work}/src", f"{tmp_work}/run"
+    _batch(spark, b0).coalesce(1).write.mode("append").parquet(src)
+    JoinCdcPipeline(spark, src, work, max_files_per_trigger=1).run_available()
+
+    # rewrite batch 0's commit the way the bucket-partitioned target
+    # wrote it: the rows plus _bucket, hash-distributed into hive dirs
+    target = f"{work}/target"
+    with open(f"{target}/_commits.jsonl") as f:
+        log = [json.loads(ln) for ln in f]
+    (delta,) = [r for r in log if r.get("kind") == "delta"]
+    vdir = f"{target}/versions/v{delta['version']:08d}"
+    stored = spark.createDataFrame(
+        spark.read.schema(JOIN_STATE_SCHEMA).parquet(vdir).collect(),
+        JOIN_STATE_SCHEMA,
+    )
+    shutil.rmtree(vdir)
+    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")
+    stored.withColumn("_bucket", bucket).repartition("_bucket").write.partitionBy(
+        "_bucket"
+    ).parquet(vdir)
+    assert any(n.startswith("_bucket=") for n in os.listdir(vdir))
+    log[0]["info"]["schema"].append(["_bucket", "int"])
+    with open(f"{target}/_commits.jsonl", "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in log)
+
+    _batch(spark, b1).coalesce(1).write.mode("append").parquet(src)
+    pipe = JoinCdcPipeline(spark, src, work, max_files_per_trigger=1)
+    pipe.run_available()
+
+    latest = {}
+    for conv, idx, _role, text, _tool, ts in b0 + b1:
+        if (conv, idx) not in latest or ts > latest[(conv, idx)][0]:
+            latest[(conv, idx)] = (ts, text)
+    want = {k: text for k, (_ts, text) in latest.items() if text is not None}
+
+    def live():
+        got = pipe.target_live()
+        assert "_bucket" not in got.columns
+        return {(r.conv_id, r.turn_idx): r.text for r in got.collect()}
+
+    assert live() == want
+    pipe.maintain(mode="incremental")   # folds the hive and flat deltas
+    assert live() == want
+    pipe.maintain()                     # full rebase
+    assert live() == want
+
+
 def test_join_sink_matches_last_writer_oracle(spark, tmp_work):
     """Hypothesis: ANY batch sequence through the join sink leaves the
     live target equal to the last-writer-per-key oracle (latest event
@@ -202,10 +247,10 @@ def test_join_sink_matches_last_writer_oracle(spark, tmp_work):
         counter["n"] += 1
         target = ParquetMergeTable(
             spark, f"{tmp_work}/p{counter['n']}", key=KEY,
-            schema=JOIN_TARGET_SCHEMA, tombstone_mode="retain",
-            compact_every=None, partition_by=["_bucket"],
+            schema=JOIN_STATE_SCHEMA, tombstone_mode="retain",
+            compact_every=None,
         )
-        sink = JoinCdcSink(target, 4)
+        sink = JoinCdcSink(target)
         bounds = sorted({0, len(rows), *(c for c in cuts if c < len(rows))})
         batches = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
         latest = {}
@@ -261,7 +306,7 @@ def test_join_mode_transient_failure_heals_via_drain(spark, tmp_work):
     VAL = lambda df: ~F.col("text").contains("POISON")  # noqa: E731
     jp = JoinCdcPipeline(
         spark, f"{tmp_work}/sj", f"{tmp_work}/jrun",
-        max_files_per_trigger=1, n_buckets=8,
+        max_files_per_trigger=1,
         validator=VAL, retry_every=1, maintain_every=2,
     )
     jp.run_available()
@@ -337,7 +382,7 @@ def test_join_mode_dlq_kill_resume_equals_uninterrupted(spark, tmp_work):
         [row("d", 0, "d0", 180)],
     ]
     VAL = lambda df: ~F.col("text").contains("POISON")  # noqa: E731
-    kw = dict(max_files_per_trigger=1, n_buckets=8, validator=VAL, retry_every=1)
+    kw = dict(max_files_per_trigger=1, validator=VAL, retry_every=1)
 
     src_u = f"{tmp_work}/src_u"
     for b in batches:

@@ -1,5 +1,5 @@
-"""Regression tests for the round-3 ADVICE findings: empty partitioned
-deltas bricking the table, snapshot GC (vacuum) + real secret
+"""Regression tests for the round-3 ADVICE findings: empty deltas
+bricking the table, snapshot GC (vacuum) + real secret
 destruction in purge_columns, replay-stable DLQ split, newest-non-null
 err/step in the set-based queue compaction, and OAEP seed/message
 mixing."""
@@ -19,55 +19,61 @@ from hermes_spark.streaming.sink import ExactlyOnceSink
 from hermes_spark.tables import ParquetMergeTable
 
 
-# -- empty partitioned delta (ADVICE high) -------------------------------
+# -- empty delta (ADVICE high) -------------------------------------------
 
 
 def test_empty_partitioned_delta_keeps_table_readable(spark, tmp_work):
     """A micro-batch where every row is stale/duplicate produces an
-    EMPTY delta; on a partitioned table that snapshot dir holds only
-    _SUCCESS, and schema inference over it raised
-    UNABLE_TO_INFER_SCHEMA on every later read — one quiet batch
-    bricked the table."""
+    EMPTY delta.  A hive-partitioned write of zero rows leaves a
+    snapshot dir with only _SUCCESS, and schema inference over it
+    raised UNABLE_TO_INFER_SCHEMA on every later read — one quiet
+    batch bricked the table.  Snapshots are flat now, but work dirs
+    written with the partitioned layout still hold such dirs."""
     schema = T.StructType(
         [
             T.StructField("id", T.IntegerType(), False),
             T.StructField("v", T.StringType(), True),
-            T.StructField("_bucket", T.IntegerType(), False),
         ]
     )
     t = ParquetMergeTable(
-        spark, f"{tmp_work}/bt", key=["id"], schema=schema,
-        compact_every=None, partition_by=["_bucket"],
+        spark, f"{tmp_work}/bt", key=["id"], schema=schema, compact_every=None,
     )
-    ddl = "id int, v string, _bucket int, op string"
-    t.merge(spark.createDataFrame([(1, "a", 0, "insert"), (2, "b", 1, "insert")], ddl),
+    ddl = "id int, v string, op string"
+    t.merge(spark.createDataFrame([(1, "a", "insert"), (2, "b", "insert")], ddl),
             batch_id=0)
     # the empty delta commits (batch-id idempotency must be preserved)…
     t.merge(spark.createDataFrame([], ddl), batch_id=1)
     assert 1 in t.committed_batch_ids()
+    # the delta dir as a partitioned write of zero rows left it
+    # (only _SUCCESS) must read as empty too
+    vdir = t._version_dir(t.version_of_batch(1))
+    for n in os.listdir(vdir):
+        if n.endswith(".parquet"):
+            os.remove(os.path.join(vdir, n))
+    assert "_SUCCESS" in os.listdir(vdir)
     # …and every read shape still works
     assert sorted(r.id for r in t.read().collect()) == [1, 2]
     assert sorted(
-        (r.id, r._bucket) for r in t.read(columns=["id", "_bucket"]).collect()
-    ) == [(1, 0), (2, 1)]
+        (r.id, r.v) for r in t.read(columns=["id", "v"]).collect()
+    ) == [(1, "a"), (2, "b")]
     # and the table still accepts subsequent batches
-    t.merge(spark.createDataFrame([(3, "c", 0, "insert")], ddl), batch_id=2)
+    t.merge(spark.createDataFrame([(3, "c", "insert")], ddl), batch_id=2)
     assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
 
 
 def test_join_cdc_all_stale_batch_then_readable(spark, tmp_work):
     """End-to-end shape of the same bug: JoinCdcSink commits
     unconditionally, and a fully re-delivered batch yields zero fresh
-    rows — the bucketed target must stay readable."""
+    rows — the target must stay readable."""
     from hermes_spark.streaming.cdc_join import (
-        JOIN_TARGET_SCHEMA, KEY, JoinCdcSink,
+        JOIN_STATE_SCHEMA, KEY, JoinCdcSink,
     )
 
     target = ParquetMergeTable(
-        spark, f"{tmp_work}/jt", key=KEY, schema=JOIN_TARGET_SCHEMA,
-        tombstone_mode="retain", compact_every=None, partition_by=["_bucket"],
+        spark, f"{tmp_work}/jt", key=KEY, schema=JOIN_STATE_SCHEMA,
+        tombstone_mode="retain", compact_every=None,
     )
-    sink = JoinCdcSink(target, n_buckets=4)
+    sink = JoinCdcSink(target)
     ddl = "conv_id string, turn_idx int, role string, text string, tool string, ts string"
     rows = [("c1", 0, "user", "hi", None, "2026-01-01 00:00:00"),
             ("c2", 0, "user", "yo", None, "2026-01-01 00:00:01")]
@@ -450,15 +456,15 @@ def test_sink_replay_detection_with_string_ledger_ids(spark, tmp_work):
     assert target.current_version() == v
     # JoinCdcSink takes the same contract
     from hermes_spark.streaming.cdc_join import (
-        JOIN_TARGET_SCHEMA, KEY, JoinCdcSink,
+        JOIN_STATE_SCHEMA, KEY, JoinCdcSink,
     )
 
     jt = ParquetMergeTable(
-        spark, f"{tmp_work}/jt", key=KEY, schema=JOIN_TARGET_SCHEMA,
+        spark, f"{tmp_work}/jt", key=KEY, schema=JOIN_STATE_SCHEMA,
         tombstone_mode="retain", compact_every=None,
     )
     jt._append_commit(version=1, batch_id="5", kind="delta")
-    jsink = JoinCdcSink(jt, n_buckets=4)
+    jsink = JoinCdcSink(jt)
     ddl = ("conv_id string, turn_idx int, role string, text string, "
            "tool string, ts string")
     turns = spark.createDataFrame(

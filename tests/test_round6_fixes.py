@@ -2,10 +2,11 @@
 
 1. iceberg purge_columns sidecar-wipe exception narrowing is covered
    in test_iceberg.py (fake-session statement tests).
-2. sink._delta_is_empty: an Iceberg int snapshot id PROVES the delta
-   was non-empty (empty MERGE returns a "batch-<id>" string marker),
-   so an Observation failure on such a batch must propagate instead
-   of zero-filling lineage counters.
+2. sink._delta_is_empty: an int commit (an Iceberg snapshot id, or a
+   local delta version) PROVES the delta write ran (an empty Iceberg
+   MERGE returns a "batch-<id>" string marker), so an Observation
+   failure on such a batch must propagate instead of zero-filling
+   lineage counters.
 3. jdbc dbtable/query exclusivity + un-encoded-query detection is
    covered in test_events_sources.py.
 """
@@ -41,7 +42,9 @@ def test_delta_is_empty_iceberg_int_commit_proves_nonempty():
     assert s._delta_is_empty("batch-7") is None
 
 
-def test_delta_is_empty_local_unreadable_stays_best_effort():
+def test_delta_is_empty_local_int_commit_proves_nonempty():
     s = _sink(_LocalLikeTarget())
-    assert s._delta_is_empty(3) is None
+    # a local delta version: the write ran, so a missing Observation is
+    # a real failure — the version dir is never inspected
+    assert s._delta_is_empty(3) is False
     assert s._delta_is_empty("sink-3") is None
