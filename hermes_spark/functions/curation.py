@@ -1,5 +1,6 @@
 """Training-data curation operators: PII scrubbing, deterministic
-sampling / dataset mixing, and document chunking.
+sampling, decontamination, repetition statistics, document chunking
+and sequence packing.
 
 These are the batch-curation operations a large-scale training-data
 pipeline runs alongside dedup/quality (task brief §extras) — all pure
@@ -11,7 +12,7 @@ partitioning, task order, or RNG state:
   card / phone / IPv4 → typed tags) + per-category match counts.  The
   patterns use only constructs with identical semantics in Java regex
   (Spark) and RE2 (DuckDB) — char classes, bounded quantifiers,
-  alternation, ``\\b`` — so the contract oracle replays them exactly.
+  alternation, ``\\b`` — so an RE2 engine replays them exactly.
 - ``hash_sample``: content-addressed Bernoulli sampling — keep a row
   iff a sha256 hex prefix of (key, salt) sorts below the fraction
   threshold.  Unlike ``df.sample()`` this is reproducible across
@@ -19,8 +20,6 @@ partitioning, task order, or RNG state:
   selects the SAME rows), and composable: disjoint salts give
   independent samples, the same salt at a larger fraction gives a
   SUPERSET (progressive sampling).
-- ``mix_datasets``: weighted deterministic mixing of N sources into
-  one tagged corpus (per-source hash_sample + unionByName).
 - ``chunk_documents``: whitespace-token windows of ``size`` with
   ``overlap`` via sequence+slice+explode — a narrow plan (no shuffle),
   which is what makes it viable at 100 TB.
@@ -28,7 +27,7 @@ partitioning, task order, or RNG state:
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -74,7 +73,7 @@ def pii_scrub(
 
 def sample_hash(key: Sequence[str | Column], salt: str = "") -> Column:
     """The 8-hex-char content hash ``hash_sample`` thresholds on —
-    exposed so callers (and the DuckDB oracle) can recompute it:
+    exposed so callers (or another engine) can recompute it:
     ``substr(sha256(concat_ws('|', salt, key...)), 1, 8)``."""
     return F.substring(
         F.sha2(F.concat_ws("|", F.lit(salt), *key), 256), 1, 8
@@ -109,33 +108,6 @@ def hash_sample(
     Same salt, larger fraction ⇒ superset; different salts ⇒
     independent."""
     return df.where(sample_hash(key, salt) < F.lit(sample_threshold(fraction)))
-
-
-def mix_datasets(
-    sources: Mapping[str, tuple[DataFrame, float]],
-    key: Sequence[str | Column],
-    salt: str = "",
-    source_col: str = "source",
-) -> DataFrame:
-    """Weighted deterministic corpus mixing: each named source
-    contributes an independent ``hash_sample`` of its rows at its own
-    rate (salted per source name), tagged with ``source_col``.
-    Column-aligned via unionByName(allowMissingColumns) so
-    heterogeneous sources compose."""
-    parts = []
-    for name in sorted(sources):
-        sdf, rate = sources[name]
-        parts.append(
-            hash_sample(sdf, key, rate, salt=f"{salt}|{name}").withColumn(
-                source_col, F.lit(name)
-            )
-        )
-    if not parts:
-        raise ValueError("mix_datasets needs at least one source")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
 
 
 def chunk_documents(
@@ -376,10 +348,10 @@ def pack_sequences(
         numeric = first.dataType.typeName() in (
             "byte", "short", "integer", "long",
         )
-        # numeric ids shard by value (replayable in any engine, the
-        # contract-oracle choice); anything else hashes — a cast
-        # of a string id to long would be NULL for every row and
-        # collapse the corpus into one unsharded window partition
+        # numeric ids shard by value (replayable in any engine);
+        # anything else hashes — a cast of a string id to long would
+        # be NULL for every row and collapse the corpus into one
+        # unsharded window partition
         key = (
             F.col(order_cols[0]).cast("long")
             if numeric
@@ -405,42 +377,4 @@ def pack_sequences(
     return (
         out.withColumn("pack_pos", F.row_number().over(wp) - 1)
         .drop("_start")
-    )
-
-
-def corpus_stats(
-    df: DataFrame,
-    by: Sequence[str] = ("source",),
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-group corpus report — the numbers every curation run logs
-    before/after each step: docs, token/char volume, and the exact
-    duplicate rate (distinct normalized fingerprints vs rows).  One
-    partial-aggregated shuffle keyed on the group."""
-    from hermes_spark.functions.text import (
-        normalized_fingerprint,
-        token_count,
-    )
-
-    return (
-        df.select(
-            *by,
-            token_count(text_col).alias("_nt"),
-            F.length(F.col(text_col)).cast("long").alias("_nc"),
-            normalized_fingerprint(text_col).alias("_fp"),
-        )
-        .groupBy(*by)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("_nt").cast("long").alias("n_tokens"),
-            F.sum("_nc").cast("long").alias("n_chars"),
-            (F.sum("_nt").cast("double")
-             / F.count(F.lit(1)).cast("double")).alias("avg_tokens"),
-            F.count_distinct(F.col("_fp")).cast("long").alias("n_distinct"),
-            (
-                F.lit(1.0)
-                - F.count_distinct(F.col("_fp")).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("dup_rate"),
-        )
     )

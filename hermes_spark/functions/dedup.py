@@ -208,7 +208,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
     unit: str = "word",
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Exact Jaccard ≥ threshold pairs over distinct n-gram shingles.
     Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
@@ -223,90 +222,63 @@ def ngram_jaccard_pairs(
     while the verified output pair set is IDENTICAL to the naive
     all-sharing-pairs join.  ``max_doc_freq`` additionally drops
     shingles in more than that many docs outright (boilerplate guard;
-    changes semantics, mirrored by the oracle)."""
-    if prefix_filter:
-        # ONE windowed doc-frequency pass serves both the hot-shingle
-        # guard and the rarest-first prefix ranking (previously two
-        # separate 20M-row shuffles computing the same counts, each
-        # re-evaluating the shingling explode), and the per-doc
-        # row_number window over every (doc, shingle) row is replaced
-        # by a groupBy collect + in-row sort_array: same (_df, sh)
-        # ascending order, same prefix — but sorting ~100-element
-        # arrays per doc instead of one global 20M-row sort.
-        sh2 = _distinct_shingles_with_df(df, id_col, text_col, n, unit)
-        if max_doc_freq is not None:
-            sh2 = sh2.where(F.col("_df") <= max_doc_freq)
-        docs = sh2.groupBy(id_col).agg(
-            F.sort_array(F.collect_list(F.struct("_df", "sh"))).alias("_ranked")
-        ).select(
-            F.col(id_col),
-            F.transform("_ranked", lambda s: s["sh"]).alias("_arr"),
-            F.size("_ranked").cast("long").alias("sz"),
-        )
-        # prefix length |x| - ceil(t|x|) + 1; the epsilon biases ceil
-        # DOWN so float error can only LENGTHEN the prefix (lossless)
-        plen = (
-            F.col("sz") - F.ceil(F.col("sz") * threshold - 1e-9) + 1
-        ).cast("int")
-        pref = docs.select(
-            F.col(id_col), F.explode(F.slice("_arr", F.lit(1), plen)).alias("sh")
-        )
-        pa = pref.select(F.col(id_col).alias("doc_a"), "sh")
-        pb = pref.select(F.col(id_col).alias("doc_b"), "sh")
-        cands = (
-            pa.join(pb, "sh")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        # verify with per-doc shingle ARRAYS (array_intersect) instead
-        # of re-exploding both sides through a candidates×shingles join
-        # (which materialized ~|cands|·|shingles/doc| rows); every
-        # candidate pair shares ≥1 prefix shingle so no zero-common
-        # pair is introduced or lost
-        a = docs.select(
-            F.col(id_col).alias("doc_a"),
-            F.col("_arr").alias("_arr_a"),
-            F.col("sz").alias("sz_a"),
-        )
-        b = docs.select(
-            F.col(id_col).alias("doc_b"),
-            F.col("_arr").alias("_arr_b"),
-            F.col("sz").alias("sz_b"),
-        )
-        return (
-            cands.join(a, "doc_a")
-            .join(b, "doc_b")
-            .withColumn(
-                "common",
-                F.size(F.array_intersect("_arr_a", "_arr_b")).cast("long"),
-            )
-            .withColumn(
-                "jaccard",
-                F.col("common").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")).cast("double"),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-
+    changes semantics)."""
+    # ONE windowed doc-frequency pass serves both the hot-shingle
+    # guard and the rarest-first prefix ranking (previously two
+    # separate 20M-row shuffles computing the same counts, each
+    # re-evaluating the shingling explode), and the per-doc
+    # row_number window over every (doc, shingle) row is replaced
+    # by a groupBy collect + in-row sort_array: same (_df, sh)
+    # ascending order, same prefix — but sorting ~100-element
+    # arrays per doc instead of one global 20M-row sort.
+    sh2 = _distinct_shingles_with_df(df, id_col, text_col, n, unit)
     if max_doc_freq is not None:
-        hot = sh.groupBy("sh").count().where(F.col("count") > max_doc_freq)
-        sh = sh.join(hot.select("sh"), "sh", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "sh")
-    b = sh.select(F.col(id_col).alias("doc_b"), "sh")
-    common = (
-        a.join(b, "sh")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("common"))
+        sh2 = sh2.where(F.col("_df") <= max_doc_freq)
+    docs = sh2.groupBy(id_col).agg(
+        F.sort_array(F.collect_list(F.struct("_df", "sh"))).alias("_ranked")
+    ).select(
+        F.col(id_col),
+        F.transform("_ranked", lambda s: s["sh"]).alias("_arr"),
+        F.size("_ranked").cast("long").alias("sz"),
     )
-    sz_a = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
+    # prefix length |x| - ceil(t|x|) + 1; the epsilon biases ceil
+    # DOWN so float error can only LENGTHEN the prefix (lossless)
+    plen = (
+        F.col("sz") - F.ceil(F.col("sz") * threshold - 1e-9) + 1
+    ).cast("int")
+    pref = docs.select(
+        F.col(id_col), F.explode(F.slice("_arr", F.lit(1), plen)).alias("sh")
+    )
+    pa = pref.select(F.col(id_col).alias("doc_a"), "sh")
+    pb = pref.select(F.col(id_col).alias("doc_b"), "sh")
+    cands = (
+        pa.join(pb, "sh")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    # verify with per-doc shingle ARRAYS (array_intersect) instead
+    # of re-exploding both sides through a candidates×shingles join
+    # (which materialized ~|cands|·|shingles/doc| rows); every
+    # candidate pair shares ≥1 prefix shingle so no zero-common
+    # pair is introduced or lost
+    a = docs.select(
+        F.col(id_col).alias("doc_a"),
+        F.col("_arr").alias("_arr_a"),
+        F.col("sz").alias("sz_a"),
+    )
+    b = docs.select(
+        F.col(id_col).alias("doc_b"),
+        F.col("_arr").alias("_arr_b"),
+        F.col("sz").alias("sz_b"),
+    )
     return (
-        common.join(sz_a, "doc_a")
-        .join(sz_b, "doc_b")
+        cands.join(a, "doc_a")
+        .join(b, "doc_b")
+        .withColumn(
+            "common",
+            F.size(F.array_intersect("_arr_a", "_arr_b")).cast("long"),
+        )
         .withColumn(
             "jaccard",
             F.col("common").cast("double")
@@ -521,10 +493,10 @@ def simhash(
     # NOTE (round 7): a packed-lane variant (two per-bit one-counters
     # per 64-bit sum, vote recovered as 2·ones−n) was measured: faster
     # in isolation (1.7 s vs 2.2 s at sf1.0) but catastrophically
-    # slower composed into q_simhash (final aggregates went from
-    # seconds to 6+ MINUTES when AQE fuses the reused final aggregate
-    # with downstream consumers — SQL-node metrics in
-    # OPTIMIZATION_r07.md).  The plain per-bit vote form is kept.
+    # slower composed into a downstream near-pair query (final
+    # aggregates went from seconds to 6+ MINUTES when AQE fuses the
+    # reused final aggregate with downstream consumers).  The plain
+    # per-bit vote form is kept.
     votes = tok.groupBy(id_col).agg(
         *[
             F.sum(
@@ -689,25 +661,3 @@ def _simhash_near_pairs_2w(
         .select("doc_a", "doc_b", "hamming")
         .distinct()
     )
-
-
-def simhash128(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Compatibility alias for ``simhash(width=128)`` — the unified
-    entry point is preferred."""
-    return simhash(df, id_col, text_col, width=128)
-
-
-def simhash128_near_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-    id_offset: int | None = None,
-) -> DataFrame:
-    """Compatibility alias — ``simhash_near_pairs`` detects the
-    signature width from the columns."""
-    return simhash_near_pairs(sig, id_col, max_hamming, bands, id_offset)

@@ -1,25 +1,13 @@
-"""Text analysis: tokenization, language-ID heuristic, quality score,
-document fingerprinting.
+"""Text analysis: tokenization, token counts and document fingerprints.
 
-All oracle-checkable functions are pure Column expressions (JVM-side,
-whole-stage codegen); the rolling-hash fingerprint is the one Arrow
-pandas UDF (bit math Spark SQL lacks at 64-bit unsigned width).
+All functions are pure Column expressions (JVM-side, whole-stage
+codegen, no Python); the curation job's quality filter, sequence
+packing and the exact-dedup operators (batch and streaming) build on
+them.
 """
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# deterministic per-"language" marker token sets over the synthetic
-# corpus vocabulary; the operator is the vote, not the lexicon.
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "a", "row", "fast", "slow"),
-    "de": ("table", "value", "batch", "merge"),
-    "es": ("data", "scan", "query", "line"),
-    "fr": ("window", "join", "agg", "group"),
-    "zh": ("spark", "hash", "vector", "stream"),
-}
 
 
 def tokens(col: str | Column = "text") -> Column:
@@ -36,179 +24,8 @@ def distinct_token_count(col: str | Column = "text") -> Column:
     return F.size(F.array_distinct(tokens(col))).cast("long")
 
 
-def lang_scores(col: str | Column = "text") -> list[Column]:
-    """Per-language vote = number of DISTINCT tokens appearing in that
-    language's marker set."""
-    toks = F.array_distinct(tokens(col))
-    return [
-        F.size(
-            F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))
-        ).alias(f"score_{lang}")
-        for lang, words in LANG_MARKERS.items()
-    ]
-
-
-def lang_id(col: str | Column = "text") -> Column:
-    """Argmax language with deterministic tie-break (lexicographically
-    smallest language code wins ties)."""
-    toks = F.array_distinct(tokens(col))
-    # build struct array (score, neg-lang) and take max
-    entries = [
-        F.struct(
-            F.size(
-                F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))
-            ).alias("score"),
-            F.lit(lang).alias("lang"),
-        )
-        for lang, words in sorted(LANG_MARKERS.items())
-    ]
-    # array_max on struct compares fields in order: score asc, then lang
-    # asc — so ties pick the LARGEST lang; invert by comparing manually
-    best = entries[0]
-    for e in entries[1:]:
-        best = F.when(e["score"] > best["score"], e).otherwise(best)
-    return best["lang"]
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length/token/stopword-style quality features, all exact-integer
-    or single-division doubles (cross-engine reproducible)."""
-    toks = tokens(text_col)
-    n_tok = F.size(toks).cast("long")
-    n_chr = F.length(F.col(text_col)).cast("long")
-    n_distinct = F.size(F.array_distinct(toks)).cast("long")
-    stop = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
-    n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop)).cast("long")
-    return df.withColumns(
-        {
-            "n_tokens": n_tok,
-            "n_chars_calc": n_chr,
-            "n_distinct_tokens": n_distinct,
-            "distinct_ratio": (n_distinct.cast("double") / n_tok.cast("double")),
-            "stopword_hits": n_stop,
-            "avg_token_len": (n_chr.cast("double") / n_tok.cast("double")),
-        }
-    )
-
-
 def normalized_fingerprint(col: str | Column = "text") -> Column:
     """Document fingerprint: sha256 of whitespace-collapsed lowercase
     text — the exact-dedup key."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sha2(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "), 256)
-
-
-@F.pandas_udf(T.LongType())
-def rolling_hash(texts: pd.Series) -> pd.Series:
-    """Polynomial rolling hash mod 2^61-1, genuinely vectorized: the
-    Arrow string buffer is read zero-copy (no per-row Python, no
-    per-row encode), rows are packed length-sorted into a byte matrix,
-    and Horner's rule runs column-wise in numpy uint64 with split-
-    multiply Mersenne reduction (2^61 ≡ 1 mod M).  This is the scale
-    exemplar for the crypto-scalar plugin pattern (F3/F4, reference
-    plugins/attributes/*): per Arrow batch, Python executes O(max_len)
-    numpy calls — never O(rows × bytes) interpreter steps."""
-    import numpy as np
-    import pyarrow as pa
-
-    M = np.uint64((1 << 61) - 1)
-    B = np.uint64(1_000_003)
-    U32M = np.uint64(0xFFFFFFFF)
-    S32, S29, S61 = np.uint64(32), np.uint64(29), np.uint64(61)
-    M29 = np.uint64((1 << 29) - 1)
-
-    arr = pa.Array.from_pandas(texts)
-    n = len(arr)
-    if n == 0:
-        return pd.Series(np.empty(0, np.int64))
-    if not isinstance(arr, (pa.StringArray, pa.LargeStringArray)):
-        arr = arr.cast(pa.string())
-    # zero-copy views of the Arrow layout: offsets + utf-8 data buffer
-    odt = np.int64 if isinstance(arr, pa.LargeStringArray) else np.int32
-    off = np.frombuffer(arr.buffers()[1], dtype=odt, count=n + 1 + arr.offset)
-    off = off[arr.offset:].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    lens = off[1:] - off[:-1]
-    valid = np.ones(n, dtype=bool)
-    if arr.null_count:
-        valid = np.array(arr.is_valid(), dtype=bool)
-        lens = np.where(valid, lens, 0)
-
-    acc = np.zeros(n, dtype=np.uint64)
-    if int(lens.max() if n else 0):
-        # rows sorted by length desc → the active set per column is a
-        # prefix, so each Horner step is a dense slice (no masks).
-        # Packing is LENGTH-TIERED: each tier's matrix is allocated at
-        # its own max length and capped at _TIER_BUDGET bytes, so memory
-        # stays O(total bytes + budget) even when one huge document
-        # shares a batch with thousands of short rows (skewed transcript
-        # corpora would otherwise OOM the worker on rows × max_len).
-        order = np.argsort(-lens, kind="stable")
-        lens_s = lens[order]
-        offs_s = off[:-1][order]
-        a_all = np.zeros(n, dtype=np.uint64)
-        BUDGET = 1 << 26  # 64 MiB matrix cap per tier
-        start = 0
-        while start < n and lens_s[start] > 0:
-            L = int(lens_s[start])
-            cap = max(1, BUDGET // L)
-            stop = min(n, start + cap)
-            # exclude zero-length rows from the tier
-            stop = start + int(
-                np.searchsorted(-lens_s[start:stop], 0, side="left")
-            )
-            l = lens_s[start:stop]
-            m = stop - start
-            total = int(l.sum())
-            row_ids = np.repeat(np.arange(m), l)
-            col_ids = np.arange(total) - np.repeat(np.cumsum(l) - l, l)
-            mat = np.zeros((m, L), dtype=np.uint8)
-            flat_src = np.repeat(offs_s[start:stop], l) + col_ids
-            mat[row_ids, col_ids] = data[flat_src]
-            # rows with length > j, per column j (l descending)
-            ks = np.searchsorted(-l, -np.arange(1, L + 1), side="right")
-            a = np.zeros(m, dtype=np.uint64)
-            for j in range(L):
-                k = int(ks[j])
-                v = a[:k]
-                lo = v & U32M
-                hi = v >> S32
-                t = hi * B
-                # t·2^32 mod M via 2^61 ≡ 1:  t = t1·2^29 + t0
-                v = (t >> S29) + ((t & M29) << S32) + lo * B + mat[:k, j]
-                a[:k] = (v >> S61) + (v & M)
-            a_all[start:stop] = np.where(a >= M, a - M, a)
-            start = stop
-        acc[order] = a_all
-    acc[~valid] = 0
-    return pd.Series(acc.astype(np.int64))
-
-
-# -- BPE-style pre-tokenization --------------------------------------------
-
-# GPT-2-family pre-tokenizer pattern, restricted to the Java-regex ∩
-# RE2 subset so the DuckDB contract oracle replays it byte-for-byte:
-# contraction suffixes, optionally-space-prefixed letter runs, digit
-# runs, and punctuation runs.  (The upstream pattern's trailing
-# whitespace lookahead `\s+(?!\S)` is dropped — RE2 has no lookahead —
-# which only affects how TRAILING whitespace would tokenize, and pure
-# whitespace runs are never counted as tokens here anyway.)
-BPE_PRETOKEN_RE = r"'(?:s|t|re|ve|m|ll|d)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+"
-
-
-def bpe_pretokens(col: str | Column = "text") -> Column:
-    """Array of BPE-style pre-tokens (the unit a GPT-2/BPE vocabulary
-    merges within; splitting never crosses a pre-token boundary).
-    Unlike whitespace ``tokens`` this separates punctuation and digit
-    runs — "don't stop 3.14!" → [don, 't, _stop, _3, ., 14, !] —
-    which is the right unit for token-budget estimation.  Pure
-    JVM-side ``regexp_extract_all`` (group 0), no Python."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(c, F.lit(BPE_PRETOKEN_RE), 0)
-
-
-def bpe_token_count(col: str | Column = "text") -> Column:
-    """Pre-token count — a deterministic, engine-portable lower-bound
-    proxy for the BPE token budget (actual BPE merges only split
-    pre-tokens further, never join them)."""
-    return F.size(bpe_pretokens(col)).cast("long")

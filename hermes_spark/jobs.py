@@ -258,8 +258,8 @@ def build_curation(
                 "max_dup_line_frac" in b or "max_top_token_frac" in b
             )
             conds = []
-            # token/distinct bounds are pure per-row expressions (the
-            # same math quality_features exposes) — no join, no shuffle
+            # token/distinct bounds are pure per-row expressions
+            # (functions/text.py) — no join, no shuffle
             n_tok = token_count(text_col)
             if "min_tokens" in b:
                 conds.append(n_tok >= b["min_tokens"])

@@ -70,9 +70,9 @@ def salted_merkle(
 
     Phase 1 groups on (key, salt) so no reducer holds a whole hot key's
     leaf set; phase 2 merges ≤ n_salts partials per key (flatten,
-    re-sort, hash).  Bit-identical to the single-phase rollup — tests
-    and the driver oracle assert it — which is what makes it a drop-in
-    skew guard for mega-conversations."""
+    re-sort, hash).  Bit-identical to the single-phase rollup (pinned
+    against a hashlib model in tests/test_operators.py), which makes
+    it a drop-in skew guard for mega-conversations."""
     p1 = (
         df.select(F.col(key), leaf.alias("_leaf"))
         .withColumn("_salt", F.pmod(F.xxhash64("_leaf"), F.lit(n_salts)))

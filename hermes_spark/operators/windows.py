@@ -167,8 +167,8 @@ def sessionize_batch(
     w = W.partitionBy(key).orderBy(F.col(ts_col).asc(), F.col("event_id").asc()) \
         if "event_id" in events.columns else W.partitionBy(key).orderBy(F.col(ts_col).asc())
     lag_ts = F.lag(ts_col).over(w)
-    # compare in microseconds — exact, and identical semantics to the
-    # DuckDB oracle's epoch_us arithmetic (no second-truncation skew)
+    # compare in microseconds — exact epoch arithmetic, no
+    # second-truncation skew
     is_new = (
         lag_ts.isNull()
         | (

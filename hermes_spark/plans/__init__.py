@@ -1,31 +1,2 @@
-"""Plan inspection utilities — pushdown/broadcast assertions for tests
-and tuning (the engine's answer to "did Catalyst do what we declared")."""
-
-from pyspark.sql import DataFrame
-
-
-def physical_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = physical_plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
-def assert_pushed_filters(df: DataFrame) -> None:
-    plan = physical_plan(df)
-    assert "PushedFilters: [" in plan and "PushedFilters: []" not in plan, plan
-
-
-def scan_read_schema(df: DataFrame) -> list[str]:
-    """Column names reaching the parquet scan (pruning check)."""
-    import re
-
-    plan = physical_plan(df)
-    out: list[str] = []
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
-        out.append(m.group(1))
-    return out
+"""Plan builders: attribute-mapping projection, column scoping and
+event fan-out to local types (``plans.mapping``)."""

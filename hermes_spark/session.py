@@ -41,15 +41,14 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Prefer shuffled hash join over sort-merge when the per-
         # partition build side fits (guide §3.1): skips sorting both
-        # sides of the fact-table joins.  Join strategy never changes
+        # sides of the join-mode classifier's batch-vs-state join
+        # (streaming/cdc_join.py) and of the error-queue gating joins
+        # (streaming/errorqueue.py).  Join strategy never changes
         # results; the AQE threshold caps the build-side partition at a
         # size safe for executors with multi-GB task memory — tune down
-        # via env for memory-tight deployments.
+        # through extra_conf for memory-tight deployments.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
         .config("spark.sql.session.timeZone", "UTC")
         # testdata parquet carries UTC-naive timestamps; read them as
         # TIMESTAMP (instant, session-TZ UTC) not TIMESTAMP_NTZ so

@@ -1,11 +1,9 @@
 """Regression tests for the round-2 ADVICE findings: torn-tail
-commit-log repair, rolling-hash memory tiering, conv-table encoding
-safety, and null-ts handling in the stateful classifier."""
+commit-log repair, conv-table encoding safety, and null-ts handling in
+the stateful classifier."""
 
-import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 
 # -- commit log crash recovery ------------------------------------------
@@ -51,38 +49,6 @@ def test_commit_log_torn_tail_repair(spark, tmp_work):
     with open(t2._commits_path) as f:
         for line in f:
             json.loads(line)
-
-
-# -- rolling hash: value model + skewed-length memory tiering ------------
-
-_M61 = (1 << 61) - 1
-
-
-def _model_hash(s):
-    if s is None:
-        return 0
-    h = 0
-    for b in s.encode("utf-8"):
-        h = (h * 1_000_003 + b) % _M61
-    return h
-
-
-def test_rolling_hash_skewed_lengths(spark):
-    """One huge document among thousands of short rows must not force a
-    rows × max_len dense allocation (ADVICE: 1 MB doc in a 10k-row
-    batch ≈ 10 GB).  Values must still match the per-row model."""
-    from hermes_spark.functions.text import rolling_hash
-
-    big = "x" * 300_000 + "tail varies"
-    texts = [big] + [f"short doc {i}" for i in range(2000)] + ["", None, "émoji ✓"]
-    pdf = pd.DataFrame({"i": range(len(texts)), "text": texts})
-    df = spark.createDataFrame(pdf)
-    got = {r.i: r.h for r in
-           df.select("i", rolling_hash(F.col("text")).alias("h")).collect()}
-    # signed int64 view of the model value
-    for i, s in enumerate(texts):
-        expect = np.int64(np.uint64(_model_hash(s)))
-        assert got[i] == expect, f"row {i}"
 
 
 # -- conv-table encoding safety ------------------------------------------

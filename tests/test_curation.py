@@ -1,5 +1,5 @@
 """Curation operators: PII scrubbing, deterministic hash sampling,
-weighted dataset mixing, document chunking."""
+decontamination, repetition statistics, chunking and packing."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from hermes_spark.functions.curation import (
     chunk_documents,
     hash_sample,
-    mix_datasets,
     pii_scrub,
     sample_threshold,
 )
@@ -88,29 +87,6 @@ def test_hash_sample_fraction_bounds():
     with pytest.raises(ValueError):
         sample_threshold(1.5)
     assert sample_threshold(0.0) == "00000000"
-
-
-def test_mix_datasets_weighted_and_tagged(spark):
-    web = spark.range(0, 3000).select(F.col("id").alias("doc_id"))
-    code = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), F.lit("py").alias("lang")
-    )
-    out = mix_datasets(
-        {"web": (web, 0.5), "code": (code, 1.0)}, key=["doc_id"], salt="mix"
-    )
-    rows = out.collect()
-    by_src = {}
-    for r in rows:
-        by_src.setdefault(r.source, []).append(r)
-    assert 0.44 < len(by_src["web"]) / 3000 < 0.56
-    assert len(by_src["code"]) == 1000  # rate 1.0 keeps everything
-    # missing columns null-filled across heterogeneous sources
-    assert all(r.lang is None for r in by_src["web"])
-    assert all(r.lang == "py" for r in by_src["code"])
-    # per-source salting: web's sample is NOT code's sample head
-    assert mix_datasets({}, key=["doc_id"]) if False else True
-    with pytest.raises(ValueError):
-        mix_datasets({}, key=["doc_id"])
 
 
 def test_chunk_documents_windows(spark):

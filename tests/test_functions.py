@@ -1,5 +1,5 @@
-"""Training-pipeline function library: dedup recall, ANN recall,
-text metrics, multimodal plumbing."""
+"""Training-pipeline function library: dedup recall and exactness,
+text fingerprints and token counts."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -56,254 +56,13 @@ def test_simhash_near_pairs(spark, docs):
     assert hits >= n_true * 0.9
 
 
-def test_ann_recall(spark, sf_dir):
-    """IVF (adaptive quantizer) must hold high recall even on
-    near-isotropic embeddings; hyperplane LSH is kept as the cheap
-    baseline but its recall on isotropic data is inherently weak."""
-    from hermes_spark.functions.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, queries, k=5).collect()
-    ex = {(r.query_id, r.neighbor_id) for r in exact}
-
-    ivf = ivf_topk(emb, queries, dim=64, k=5, n_lists=16, n_probe=6).collect()
-    iv = {(r.query_id, r.neighbor_id) for r in ivf}
-    ivf_recall = len(ex & iv) / len(ex)
-    assert ivf_recall >= 0.7, f"IVF recall {ivf_recall}"
-
-    lsh = lsh_topk(emb, queries, dim=64, k=5).collect()
-    lp = {(r.query_id, r.neighbor_id) for r in lsh}
-    assert len(ex & lp) / len(ex) >= 0.1  # sanity floor for the baseline
-
-
-def test_rolling_hash_deterministic(spark, sf_dir):
-    from hermes_spark.functions.text import rolling_hash
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
-    a = d.select("doc_id", rolling_hash(F.col("text")).alias("h")).collect()
-    b = d.select("doc_id", rolling_hash(F.col("text")).alias("h")).collect()
-    assert sorted((r.doc_id, r.h) for r in a) == sorted((r.doc_id, r.h) for r in b)
-    assert len({r.h for r in a}) == len(a)  # distinct texts → distinct hashes
-
-
-def test_multimodal_features_and_frame_plan(spark):
-    from hermes_spark.functions.multimodal import (
-        extract_features,
-        frame_sample_plan,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, n=30)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r.features) == 16 for r in rows)
-    # deterministic stub: same payload → same features
-    again = {r.media_id: r.features for r in extract_features(media).collect()}
-    assert all(again[r.media_id] == r.features for r in rows)
-
-    plan = frame_sample_plan(media, every_ms=500)
-    p = plan.groupBy("media_id").count().collect()
-    assert len(p) == 10  # one third are videos
-    assert all(r["count"] >= 1 for r in p)
-
-
-def test_multimodal_real_decode(spark):
-    """Round 6: WAV/BMP/PPM payloads are REAL format bytes and the
-    decode is a real parse — properties and exact content sums match
-    an independent numpy recomputation; BMP row-stride padding and
-    top-down images decode correctly; malformed payloads degrade to
-    decoded=False instead of failing the batch."""
-    import numpy as np
-
-    from hermes_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        extract_features,
-        make_bmp,
-        make_wav,
-        synthetic_decodable_media,
-        wav_params,
-    )
-
-    media = synthetic_decodable_media(spark, n=24)
-    rows = {r.media_id: r for r in decode_media(media).collect()}
-    assert len(rows) == 24 and all(r.decoded for r in rows.values())
-    for i, r in rows.items():
-        v = i // 3
-        if i % 3 == 0:
-            rate, ch, frames = wav_params(v)
-            assert (r.format, r.sample_rate, r.n_channels, r.n_frames) == (
-                "wav", rate, ch, frames,
-            )
-            assert r.duration_ms == frames * 1000 // rate
-            assert r.sum_values == sum(
-                ((v * 7919 + j * 31) % 65536) - 32768 for j in range(frames * ch)
-            )
-        elif i % 3 == 1:
-            assert (r.format, r.width, r.height) == ("bmp", 4 + v, 3 + v % 5)
-            assert r.sum_values == sum(
-                (v * 13 + k * 7) % 256 for k in range((4 + v) * (3 + v % 5) * 3)
-            )
-        else:
-            assert (r.format, r.width, r.height) == ("ppm", 5 + v, 2 + v % 4)
-
-    # top-down BMP (negative height) and corrupt payloads in one frame
-    corrupt = spark.createDataFrame(
-        [
-            (0, "image", make_bmp(5, 4, seed=9, topdown=True), None),
-            (1, "image", b"BM" + b"\x00" * 80, None),  # malformed header
-            (2, "audio", make_wav(8000, 1, [7] * 10)[:30], None),  # truncated
-            (3, "video", b"\x00\x01\x02" * 30, None),  # opaque blob
-        ],
-        MEDIA_SCHEMA,
-    )
-    got = {r.media_id: r for r in decode_media(corrupt).collect()}
-    assert got[0].decoded and got[0].width == 5 and got[0].height == 4
-    assert got[0].sum_values == sum((9 + k * 7) % 256 for k in range(5 * 4 * 3))
-    assert not got[1].decoded and not got[2].decoded and not got[3].decoded
-    assert got[3].n_bytes == 90
-
-    # features for decodable media come from decoded CONTENT: the
-    # histogram of a constant-sample wav concentrates in one bin, and
-    # two different contents with identical byte length differ
-    feats = {
-        r.media_id: r.features
-        for r in extract_features(
-            spark.createDataFrame(
-                [
-                    (0, "audio", make_wav(8000, 1, [0] * 100), None),
-                    (1, "audio", make_wav(8000, 1, [-32768] * 100), None),
-                ],
-                MEDIA_SCHEMA,
-            )
-        ).collect()
-    }
-    assert feats[0] != feats[1]
-    assert max(feats[1]) == feats[1][0] == 1.0  # all samples in bin 0
-    assert abs(sum(feats[0]) - 1.0) < 1e-6
-
-
-def test_cosine_neardup_pairs(spark, sf_dir):
-    """Embedding near-dup: deterministic twins recovered with high
-    recall; verified pairs all exceed the threshold (no FPs by
-    construction of the exact-verify stage)."""
-    from hermes_spark.functions.similarity import cosine_neardup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    twins = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x * (F.lit(1.0) + ((i % 7) - 3) / F.lit(1000.0)),
-        ).alias("embedding"),
-    )
-    pairs = cosine_neardup_pairs(
-        emb.unionByName(twins), dim=64, threshold=0.999, n_planes=12
-    ).collect()
-    n = emb.count()
-    diag = [r for r in pairs if r.vec_b - r.vec_a == 100000]
-    assert len(diag) >= 0.9 * n
-    assert all(r.cosine >= 0.999 for r in pairs)
-
-
-def test_simhash128_lossless_and_fewer_candidates(spark):
-    """128-bit SimHash: pigeonhole retrieval at d≤3 over 4×32-bit bands
-    equals direct Hamming, and the band-join candidate volume is below
-    the 64-bit operator's on the same corpus (the measured n²/2¹⁶ →
-    n²/2³² fix)."""
-    from pyspark.sql import functions as F
-
-    from hermes_spark.functions.dedup import (
-        simhash,
-        simhash128,
-        simhash128_near_pairs,
-        simhash_near_pairs,
-    )
-
-    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
-    rows = []
-    for i in range(60):
-        base = " ".join(words[(i + j) % len(words)] for j in range(24))
-        rows.append((i, base))
-        rows.append((i + 10000, base + " tail"))  # noisy copy
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = simhash128(df).persist()
-    assert sigs.columns == ["doc_id", "sig_hi", "sig_lo"]
-
-    found = simhash128_near_pairs(sigs, max_hamming=3)
-    a = sigs.select(F.col("doc_id").alias("doc_a"),
-                    F.col("sig_hi").alias("a_hi"), F.col("sig_lo").alias("a_lo"))
-    b = sigs.select(F.col("doc_id").alias("doc_b"),
-                    F.col("sig_hi").alias("b_hi"), F.col("sig_lo").alias("b_lo"))
-    direct = (
-        a.join(b, a.doc_a < b.doc_b)
-        .withColumn(
-            "h",
-            F.bit_count(F.expr("a_hi ^ b_hi")) + F.bit_count(F.expr("a_lo ^ b_lo")),
-        )
-        .where(F.col("h") <= 3)
-        .select("doc_a", "doc_b")
-    )
-    got = {(r.doc_a, r.doc_b) for r in found.collect()}
-    want = {(r.doc_a, r.doc_b) for r in direct.collect()}
-    assert got == want and len(want) > 0  # lossless, non-trivial
-
-    c64 = simhash_near_pairs(simhash(df), max_hamming=64, bands=4).count()
-    c128 = simhash128_near_pairs(sigs, max_hamming=128).count()
-    assert c128 <= c64
-    sigs.unpersist()
-
-
-def test_auto_n_planes_formula_and_neardup(spark):
-    """n_planes=None sizes the hyperplane count from the corpus so
-    per-bucket occupancy — hence candidate volume per vector — stays
-    constant as data grows (the round-4 telemetry sizing formula)."""
-    from pyspark.sql import functions as F
-
-    from hermes_spark.functions.similarity import (
-        auto_n_planes,
-        cosine_neardup_pairs,
-    )
-
-    assert auto_n_planes(4_000) == 11
-    assert auto_n_planes(1_000_000_000) == 29
-    assert auto_n_planes(1) == 4          # floor
-    assert auto_n_planes(1 << 63, 1.0) == 62  # signed-word ceiling
-
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((120, 16)).astype(float)
-    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
-    rows += [(i + 100000, (v * 1.0001).tolist()) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    found = (
-        cosine_neardup_pairs(df, dim=16, threshold=0.999, n_planes=None)
-        .where(F.col("vec_b") - F.col("vec_a") == 100000)
-        .count()
-    )
-    assert found >= 108  # ≥90% twin recall under auto sizing
-
-
 def test_simhash_unified_width_surface(spark):
     """One entry point: simhash(width=) picks the signature layout and
-    simhash_near_pairs auto-detects it from the columns; the legacy
-    simhash128* names stay as aliases with identical output."""
-    from hermes_spark.functions.dedup import (
-        simhash,
-        simhash128,
-        simhash_near_pairs,
-    )
+    simhash_near_pairs auto-detects it from the columns; both widths
+    are lossless, and the 128-bit band join yields no more candidates
+    than the 64-bit one on the same corpus (the measured
+    n²/2¹⁶ → n²/2³² fix)."""
+    from hermes_spark.functions.dedup import simhash, simhash_near_pairs
 
     words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
     rows = []
@@ -317,14 +76,8 @@ def test_simhash_unified_width_surface(spark):
     assert s64.columns == ["doc_id", "simhash"]
     s128 = simhash(df, width=128)
     assert s128.columns == ["doc_id", "sig_hi", "sig_lo"]
-    # alias is bit-identical
-    legacy = {r.doc_id: (r.sig_hi, r.sig_lo) for r in simhash128(df).collect()}
-    unified = {r.doc_id: (r.sig_hi, r.sig_lo) for r in s128.collect()}
-    assert legacy == unified
     # near_pairs dispatches on the columns: both widths are lossless at
     # the pigeonhole-guaranteed d ≤ 3 vs direct Hamming
-    import pandas as pd  # noqa: F401 (collected driver-side below)
-
     def direct_pairs(sig_rows, ham):
         out = set()
         ids = sorted(sig_rows)
@@ -352,9 +105,13 @@ def test_simhash_unified_width_surface(spark):
     }
     assert got128 == direct_pairs(rows128, 3) and got128
 
-    import pytest as _pytest
+    # band-join candidate volume: every pair sharing a band survives
+    # the full-width Hamming bound, so the counts are the candidates
+    c64 = simhash_near_pairs(s64, max_hamming=64, bands=4).count()
+    c128 = simhash_near_pairs(s128, max_hamming=128).count()
+    assert c128 <= c64
 
-    with _pytest.raises(ValueError, match="width"):
+    with pytest.raises(ValueError, match="width"):
         simhash(df, width=32)
 
 
@@ -397,150 +154,82 @@ def test_simhash_token_doc_freq_prefilter(spark):
     assert avg_ham(raw) < avg_ham(filtered.values()) * 0.6
 
 
-def test_multimodal_resize_and_frame_sampling(spark):
-    """round 6: real nearest-neighbor resize / resample + audio frame
-    sampling.  Orientation matters: a bottom-up and a top-down BMP with
-    IDENTICAL pixel-area bytes decode to vertically mirrored images, so
-    their 3x2 resizes sum differently (unless the sampled rows happen
-    to mirror onto themselves) — the op must flip bottom-up storage."""
-    from hermes_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        make_bmp,
-        make_wav,
-        resize_media,
-        sample_frames,
-        synthetic_media,
-    )
+def test_fingerprint_and_token_count_match_python(spark):
+    """normalized_fingerprint is sha256 of the lowercased, space-trimmed
+    text with whitespace runs collapsed to one space; token_count counts
+    the whitespace-split tokens of the same normalization."""
+    import hashlib
+    import re
 
-    media = spark.createDataFrame(
-        [
-            (0, "image", make_bmp(5, 4, seed=9), None),
-            (1, "image", make_bmp(5, 4, seed=9, topdown=True), None),
-            (2, "audio", make_wav(8000, 2, list(range(-20, 20))), None),
-            (3, "video", b"\x00opaque", (None, None, 40, "h264")),
-        ],
-        MEDIA_SCHEMA,
-    )
-    res = {r.media_id: r for r in resize_media(media, 3, 2, 4000).collect()}
+    from hermes_spark.functions.text import normalized_fingerprint, token_count
 
-    # bottom-up flip: image row r samples source row r*4//2 in IMAGE
-    # orientation; for the bottom-up file that is file row (3 - r*2)
-    def px(k):
-        return (9 + k * 7) % 256
-
-    exp_bu = sum(
-        px((4 - 1 - (r * 4 // 2)) * 15 + (c * 5 // 3) * 3 + ch)
-        for r in range(2) for c in range(3) for ch in range(3)
-    )
-    exp_td = sum(
-        px((r * 4 // 2) * 15 + (c * 5 // 3) * 3 + ch)
-        for r in range(2) for c in range(3) for ch in range(3)
-    )
-    assert res[0].sum_values == exp_bu
-    assert res[1].sum_values == exp_td
-    assert exp_bu != exp_td  # content chosen so the mirror is visible
-
-    # audio: 20 frames @8k stereo -> 10 frames @4k, frame j samples
-    # source frame 2j (both channels)
-    samples = list(range(-20, 20))
-    assert res[2].out_frames == 10 and res[2].n_values == 20
-    assert res[2].sum_values == sum(
-        samples[(2 * j) * 2 + c] for j in range(10) for c in range(2)
-    )
-    # undecodable passes through, does not fail the scan
-    assert res[3].decoded is False and res[3].sum_values is None
-
-    # frame sampling: audio ticks are REAL channel sums; video ticks
-    # come from metadata with decoded=False (codec absent)
-    fr = sample_frames(media, every_ms=2).collect()
-    audio = sorted(
-        (r.frame_ts_ms, r.sample_sum) for r in fr if r.media_id == 2
-    )
-    # 20 frames @8000 Hz = 2.5 ms of audio -> ticks 0 and 2
-    assert audio == [
-        (0, samples[0] + samples[1]),
-        (2, samples[16 * 2] + samples[16 * 2 + 1]),
-    ]
-    video = sorted(r.frame_ts_ms for r in fr if r.media_id == 3)
-    assert video == list(range(0, 40, 2))
-    assert all(not r.decoded for r in fr if r.media_id == 3)
-
-    # the fake-media table (no decodable payloads): only video ticks
-    fake = sample_frames(synthetic_media(spark, 9), every_ms=1000)
-    assert {r.kind for r in fake.collect()} <= {"video"}
-
-
-def test_bpe_pretokens_branches(spark):
-    from hermes_spark.functions.text import bpe_pretokens, bpe_token_count
-
-    df = spark.createDataFrame(
-        [
-            (1, "don't stop 3.14!"),
-            (2, "hello   world"),
-            (3, ""),
-            (4, None),
-            (5, "we're it's i'll you've I'm he'd"),
-        ],
-        "i int, text string",
-    )
-    out = {
-        r.i: r
+    texts = {
+        1: "Hello   World",
+        2: "  hello world  ",
+        3: "tab\tand\nnewline runs",
+        4: "MiXeD Case text, with punctuation!",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {
+        r.doc_id: (r.fp, r.n)
         for r in df.select(
-            "i",
-            bpe_pretokens("text").alias("t"),
-            bpe_token_count("text").alias("n"),
+            "doc_id",
+            normalized_fingerprint("text").alias("fp"),
+            token_count("text").alias("n"),
         ).collect()
     }
-    assert out[1].t == ["don", "'t", " stop", " 3", ".", "14", "!"]
-    # runs of whitespace never become tokens
-    assert out[2].t == ["hello", " world"] and out[2].n == 2
-    assert out[3].n == 0
-    assert out[4].t is None and out[4].n is None
-    # every contraction suffix branch fires
-    assert out[5].t.count("'s") == 1 and "'re" in out[5].t and "'ll" in out[5].t
-    assert "'ve" in out[5].t and "'m" in out[5].t and "'d" in out[5].t
+    want = {}
+    for d, t in texts.items():
+        norm = t.lower().strip(" ")
+        want[d] = (
+            hashlib.sha256(re.sub(r"\s+", " ", norm).encode()).hexdigest(),
+            len(re.split(r"\s+", norm)),
+        )
+    assert got == want
+    assert got[1][0] == got[2][0]  # same text up to case and spacing
 
 
-def test_quantize_dequantize_roundtrip(spark):
-    from hermes_spark.functions.similarity import (
-        dequantize_embeddings,
-        quantize_embeddings,
-    )
-    import pyspark.sql.functions as F
+def test_ngram_jaccard_pairs_match_python_model(spark):
+    """Exact word-3-gram Jaccard with the doc-frequency guard against a
+    plain-Python recomputation: the prefix-filtered candidate join
+    loses no pair above the threshold and invents none."""
+    from hermes_spark.functions.dedup import ngram_jaccard_pairs
 
-    df = spark.createDataFrame(
-        [
-            (1, [0.5, -1.0, 0.25, 0.0]),
-            (2, [0.0, 0.0, 0.0, 0.0]),     # zero vector
-            (3, [127.0]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    q = quantize_embeddings(df)
-    out = {r.vec_id: r for r in dequantize_embeddings(q).collect()}
-    # max|v|=1.0 -> scale=1/127; extremes hit ±127
-    assert out[1].q == [64, -127, 32, 0]
-    assert out[2].scale == 0.0 and out[2].q == [0, 0, 0, 0]
-    assert out[3].q == [127] and out[3].scale == 1.0
-    # roundtrip error bounded by scale/2 per component
-    for r in out.values():
-        for orig, deq in zip(r.embedding, r.embedding_deq):
-            assert abs(orig - deq) <= r.scale / 2 + 1e-12
+    rows = []
+    for i in range(10):
+        base = " ".join(f"t{(i * 5 + j) % 60}" for j in range(10))
+        rows.append((i, base))
+        # a shared boilerplate tail: its 3-gram sits in all ten copies
+        rows.append((i + 100, base + " boiler plate text"))
+    rows.append((500, "too short"))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
 
+    def model(max_doc_freq, threshold):
+        sh = {}
+        for d, t in rows:
+            toks = t.lower().split(" ")
+            sh[d] = {" ".join(toks[k:k + 3]) for k in range(len(toks) - 2)}
+        freq: dict[str, int] = {}
+        for s in sh.values():
+            for g in s:
+                freq[g] = freq.get(g, 0) + 1
+        sh = {d: {g for g in s if freq[g] <= max_doc_freq} for d, s in sh.items()}
+        out = {}
+        for a in sh:
+            for b in sh:
+                common = len(sh[a] & sh[b])
+                if a < b and common:
+                    j = common / (len(sh[a]) + len(sh[b]) - common)
+                    if j >= threshold:
+                        out[(a, b)] = j
+        return out
 
-def test_corpus_stats_dup_rate(spark):
-    from hermes_spark.functions.curation import corpus_stats
-
-    df = spark.createDataFrame(
-        [
-            (1, "s1", "a b c"),
-            (2, "s1", "a b c"),       # dup of 1
-            (3, "s1", "d e"),
-            (4, "s2", "x y z w"),
-        ],
-        "doc_id long, source string, text string",
-    )
-    out = {r.source: r for r in corpus_stats(df).collect()}
-    assert out["s1"].n_docs == 3 and out["s1"].n_distinct == 2
-    assert abs(out["s1"].dup_rate - 1 / 3) < 1e-12
-    assert out["s1"].n_tokens == 8 and out["s2"].dup_rate == 0.0
+    for max_doc_freq, threshold in ((5, 0.8), (64, 0.2)):
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in ngram_jaccard_pairs(
+                df, threshold=threshold, max_doc_freq=max_doc_freq
+            ).collect()
+        }
+        want = model(max_doc_freq, threshold)
+        assert got == want and want, (max_doc_freq, threshold)

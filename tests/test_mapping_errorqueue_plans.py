@@ -1,15 +1,9 @@
-"""Attribute-mapping projection, column scoping, dead-letter drain,
-and physical-plan assertions (pushdown / broadcast / pruning)."""
+"""Attribute-mapping projection, column scoping and dead-letter
+drain."""
 
-import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
-from hermes_spark.plans import (
-    assert_broadcast_join,
-    assert_pushed_filters,
-    scan_read_schema,
-)
 from hermes_spark.plans.mapping import (
     ColumnScopes,
     apply_mapping,
@@ -111,20 +105,3 @@ def test_enqueue_compaction(spark):
         [("k", None, 2, "delete", "e2")],
         "key string, v string, offset long, op string, err string"))
     assert dlq.read().count() == 0
-
-
-# --- plan assertions --------------------------------------------------------
-
-def test_filter_pushdown_and_pruning(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    q = li.where(F.col("l_shipdate") < "1995-01-01").select("l_orderkey", "l_quantity")
-    assert_pushed_filters(q)
-    schemas = scan_read_schema(q)
-    assert schemas and all("l_extendedprice" not in s for s in schemas)
-
-
-def test_star_join_broadcasts_dims(spark, sf_dir):
-    import __spark_entry__ as em
-
-    q = em.queries()["star_join"](spark, sf_dir)
-    assert_broadcast_join(q)

@@ -238,3 +238,115 @@ def test_merge_deletes_without_op_in_schema(spark, tmp_work):
     assert [(r.id, r.v) for r in rows] == [(2, "b")]
     t.compact()
     assert [(r.id, r.v) for r in t.read().collect()] == [(2, "b")]
+
+
+# --- integrity, merkle and sessionization against plain-Python models ------
+
+def test_fk_cascade_and_orphans_match_model(spark):
+    """cascade_fk_filter prunes each child against its already-pruned
+    parent (customers → orders → lineitems), and fk_filter with
+    keep_if_exists=False returns exactly the orphans; FK equality is
+    null-safe."""
+    from hermes_spark.operators.integrity import cascade_fk_filter, fk_filter
+
+    # the NULL parent key matches the NULL-FK order (o_orderkey 7)
+    cust = [(c,) for c in range(1, 21) if c % 10 != 0] + [(None,)]
+    orders = [(o, None if o == 7 else o % 23) for o in range(1, 41)]
+    items = [(o, ln) for o in range(1, 41) for ln in range(o % 3 + 1)]
+    tables = {
+        "customer": spark.createDataFrame(cust, "c_custkey int"),
+        "orders": spark.createDataFrame(orders, "o_orderkey int, o_custkey int"),
+        "lineitem": spark.createDataFrame(items, "l_orderkey int, l_line int"),
+    }
+    out = cascade_fk_filter(
+        tables,
+        [
+            ("orders", "customer", [("o_custkey", "c_custkey")]),
+            ("lineitem", "orders", [("l_orderkey", "o_orderkey")]),
+        ],
+    )
+    cust_keys = {c for (c,) in cust}
+    kept_orders = {o for o, c in orders if c in cust_keys}
+    assert {r.o_orderkey for r in out["orders"].collect()} == kept_orders
+    assert sorted(tuple(r) for r in out["lineitem"].collect()) == sorted(
+        (o, ln) for o, ln in items if o in kept_orders
+    )
+
+    orphans = fk_filter(
+        tables["orders"], tables["customer"], [("o_custkey", "c_custkey")],
+        keep_if_exists=False,
+    )
+    assert sorted(tuple(r) for r in orphans.collect()) == sorted(
+        (o, c) for o, c in orders if c not in cust_keys
+    )
+
+
+def test_salted_merkle_equals_single_phase_digest(spark):
+    """The two-phase salted rollup is bit-identical to sha256 over the
+    sorted, separator-joined leaves of each key — including a hot key
+    whose leaves spread over every salt."""
+    import hashlib
+
+    from hermes_spark.operators.checksum import salted_merkle
+
+    rows = [("hot", e, f"type{e % 5}") for e in range(300)]
+    rows += [(f"u{u}", 1000 + u * 10 + e, "click") for u in range(6) for e in range(u + 1)]
+    ev = spark.createDataFrame(rows, "user_id string, event_id long, event_type string")
+    leaf = F.concat_ws(
+        ":", F.format_string("%010d", F.col("event_id")), F.sha2(F.col("event_type"), 256)
+    )
+    got = {
+        r.user_id: (r.merkle, r.n_leaves)
+        for r in salted_merkle(ev, "user_id", leaf, n_salts=16).collect()
+    }
+
+    leaves: dict[str, list[str]] = {}
+    for user, eid, etype in rows:
+        leaves.setdefault(user, []).append(
+            f"{eid:010d}:{hashlib.sha256(etype.encode()).hexdigest()}"
+        )
+    want = {
+        u: (hashlib.sha256("\x1f".join(sorted(ls)).encode()).hexdigest(), len(ls))
+        for u, ls in leaves.items()
+    }
+    assert got == want
+
+
+def test_sessionize_batch_matches_model(spark):
+    """A new session starts at a key's first event and whenever the gap
+    to the previous event (ts, then event_id order) exceeds the
+    threshold; a gap of exactly the threshold stays in the session."""
+    from hermes_spark.operators.windows import sessionize_batch
+
+    gap = 1800
+    times = {
+        "a": [0, 100, 1900, 1900 + gap + 1, 5000, 5000],
+        "b": [50],
+        "c": [10, 10 + gap, 10 + 2 * gap + 5, 20000],
+    }
+    rows = [(u, i, t) for u, ts in times.items() for i, t in enumerate(ts)]
+    ev = spark.createDataFrame(rows, "user_id string, event_id long, t long").withColumn(
+        "ts", F.timestamp_seconds("t")
+    )
+    got = sorted(
+        (r.user_id, r.session_id, r.n_events, r.start_s, r.end_s)
+        for r in sessionize_batch(ev, key="user_id", ts_col="ts", gap_seconds=gap)
+        .select(
+            "user_id", "session_id", "n_events",
+            F.unix_seconds("session_start").alias("start_s"),
+            F.unix_seconds("session_end").alias("end_s"),
+        )
+        .collect()
+    )
+
+    want = []
+    for u, ts in times.items():
+        sessions: list[list[int]] = []
+        for t in sorted(ts):
+            if not sessions or t - sessions[-1][-1] > gap:
+                sessions.append([])
+            sessions[-1].append(t)
+        want += [
+            (u, sid, len(s), s[0], s[-1]) for sid, s in enumerate(sessions, start=1)
+        ]
+    assert got == sorted(want)

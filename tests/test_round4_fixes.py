@@ -1,8 +1,7 @@
 """Regression tests for the round-3 ADVICE findings: empty deltas
 bricking the table, snapshot GC (vacuum) + real secret
-destruction in purge_columns, replay-stable DLQ split, newest-non-null
-err/step in the set-based queue compaction, and OAEP seed/message
-mixing."""
+destruction in purge_columns, replay-stable DLQ split, and
+newest-non-null err/step in the set-based queue compaction."""
 
 from __future__ import annotations
 
@@ -280,38 +279,6 @@ def test_set_based_compaction_keeps_newest_nonnull_err_step(spark, tmp_work):
     r = rows[0]
     assert r.op == "insert" and r.v == "b"        # compacted payload = newest
     assert r.err == "boom" and r.step == 2        # meta = newest NON-NULL
-
-
-# -- OAEP seed/message mixing (ADVICE low) -------------------------------
-
-
-def test_oaep_reused_seed_does_not_correlate(spark):
-    """Identical seeds with different plaintexts must not produce
-    correlated masks: the message is mixed into the seed hash, so a
-    reused seed only ever leaks exact-duplicate (value, seed) rows."""
-    import test_crypto as tc
-
-    from hermes_spark.functions.crypto import (
-        rsa_oaep_decrypt, rsa_oaep_encrypt,
-    )
-
-    n, e, d = tc._gen_key(512, seed=11)
-    df = spark.createDataFrame(
-        [("msg-one", "SAME_SEED"), ("msg-two", "SAME_SEED"),
-         ("msg-one", "SAME_SEED")],
-        "msg string, seed string",
-    )
-    enc = df.select(
-        "msg", rsa_oaep_encrypt("msg", n, e, "seed", hash_name="SHA").alias("ct")
-    )
-    rows = enc.collect()
-    cts = [r.ct for r in rows]
-    # deterministic per (value, seed): the two msg-one rows agree…
-    assert cts[0] == cts[2]
-    # …but equal seeds with different plaintexts share no ciphertext
-    assert cts[0] != cts[1]
-    dec = enc.select(rsa_oaep_decrypt("ct", n, d, hash_name="SHA").alias("pt")).collect()
-    assert [r.pt for r in dec] == ["msg-one", "msg-two", "msg-one"]
 
 
 # -- sidecar plumbing ----------------------------------------------------
