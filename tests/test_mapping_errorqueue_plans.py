@@ -1,12 +1,15 @@
-"""Attribute-mapping projection, column scoping and dead-letter
-drain."""
+"""Attribute-mapping projection, column scoping, dead-letter drain,
+and physical-plan assertions (pushdown / broadcast / pruning)."""
 
+import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
 from hermes_spark.plans.mapping import (
     ColumnScopes,
+    LocalTypeSpec,
     apply_mapping,
+    fanout_events,
     required_columns,
 )
 from hermes_spark.streaming.errorqueue import DeadLetterQueue
@@ -105,3 +108,64 @@ def test_enqueue_compaction(spark):
         [("k", None, 2, "delete", "e2")],
         "key string, v string, offset long, op string, err string"))
     assert dlq.read().count() == 0
+
+
+# --- plan assertions --------------------------------------------------------
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _on_disk(spark, df, name):
+    """Round-trip through parquet so the planner sees real file sizes
+    (in-memory frames carry no size statistics)."""
+    path = f"{scratch_dir('mapplan')}/{name}"
+    df.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_filter_pushdown_and_pruning(spark, remote):
+    """The attribute mapping is a pure projection: a predicate on a
+    mapped attribute pushes through it to the remote scan, and remote
+    columns no mapping reads (the secret ``pw``) are never decoded."""
+    src = _on_disk(spark, remote, "remote")
+    q = apply_mapping(
+        src,
+        {
+            "uid": "id",
+            "jobs": ["job1", "job2"],
+            "display": {"expr": "concat(name, ' <', mail, '>')"},
+        },
+    ).where(F.col("uid") == "u1")
+    plan = _physical(q)
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1, plan
+    assert "EqualTo(id,u1)" in scans[0], scans[0]
+    schema = scans[0].split("ReadSchema: ")[1]
+    assert "pw" not in schema and "id:" in schema, schema
+    assert [r.uid for r in q.collect()] == ["u1"]
+
+
+def test_star_join_broadcasts_dims(spark):
+    """Cached fan-out joins each local type's events to the client's
+    remote-object cache on the key; a small cache is a broadcast
+    dimension, so the event side never shuffles."""
+    cache = _on_disk(spark, spark.createDataFrame(
+        [(1, "alice", "a@x", "B1"), (2, "bob", "b@x", None)],
+        "uid int, login string, mail string, building string",
+    ), "cache")
+    ev = _on_disk(spark, spark.createDataFrame(
+        [(1, "update", 10, None, None, "B9"),
+         (2, "insert", 11, "bob", "b@y", "B2")],
+        "uid int, op string, ts int, login string, mail string, building string",
+    ), "events")
+    types = [
+        LocalTypeSpec("account", {"username": "login", "email": "mail"}),
+        LocalTypeSpec("badge", {"tag": {"expr": "concat(building, ':', login)"}}),
+    ]
+    out = fanout_events(ev, types, key_cols=["uid"], cache=cache)
+    assert sorted(out) == ["account", "badge"]
+    for name, df in out.items():
+        plan = _physical(df)
+        assert "BroadcastHashJoin" in plan, (name, plan)
+        assert "SortMergeJoin" not in plan, (name, plan)

@@ -1,13 +1,12 @@
 """Physical-plan shape regressions: the plans we iterated to must not
 silently degrade.  Each assertion encodes a scale property from the
-round briefs: column pruning reaches the scan, the Python-free
-operators stay Python-free, and the sharded/narrow operators keep
-their exchange shape.  Every plan is built by a direct operator call
-on a small in-memory frame."""
+round briefs: column pruning and key filters reach the scan, small
+parents broadcast, the Python-free operators stay Python-free, and the
+sharded/narrow operators keep their exchange shape.  Every plan is
+built by a direct operator call on a small frame."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,6 +67,63 @@ def test_pruned_state_read_never_scans_text(spark):
     for ln in scan_lines:
         assert "text" not in ln and "role" not in ln and "tool" not in ln, ln
     t.drop()
+
+
+def test_filter_pushdown_reaches_scan(spark):
+    """A key predicate on the merge-on-read state (base ⊎ deltas,
+    latest-per-key fold) is pushed below the fold into every version's
+    parquet scan: a point lookup never decodes the other keys."""
+    work = scratch_dir("planpush")
+    t = ParquetMergeTable(
+        spark, work + "/t", key=["conv_id", "turn_idx"], schema=WIDE_SCHEMA
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("c1", 0, "insert", "user", "a", None, None, "x", 1),
+             ("c2", 0, "insert", "user", "b", None, None, "y", 2)],
+            WIDE_SCHEMA,
+        ),
+        batch_id=0,
+    )
+    t.merge(
+        spark.createDataFrame(
+            [("c1", 1, "insert", "user", "c", None, None, "z", 3)], WIDE_SCHEMA
+        ),
+        batch_id=1,
+    )
+    df = t.read().where(F.col("conv_id") == "c1").select("conv_id", "turn_idx")
+    plan = _physical(df)
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert len(pushed) == 2, plan  # one scan per committed version
+    for ln in pushed:
+        assert "EqualTo(conv_id,c1)" in ln, ln
+    assert sorted(tuple(r) for r in df.collect()) == [("c1", 0), ("c1", 1)]
+    t.drop()
+
+
+def test_small_dim_join_broadcasts(spark, sf_dir):
+    """FK constraints over small parents pick BroadcastHashJoin, not a
+    shuffled join: the customer → orders → lineitem cascade prunes the
+    fact table with map-side semi-joins (integrity.py's scale note)."""
+    from hermes_spark.operators.integrity import cascade_fk_filter
+
+    def t(name, *cols):
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet").select(*cols)
+
+    out = cascade_fk_filter(
+        {
+            "customer": t("customer", "c_custkey"),
+            "orders": t("orders", "o_orderkey", "o_custkey"),
+            "lineitem": t("lineitem", "l_orderkey", "l_linenumber"),
+        },
+        [
+            ("orders", "customer", [("o_custkey", "c_custkey")]),
+            ("lineitem", "orders", [("l_orderkey", "o_orderkey")]),
+        ],
+    )
+    plan = _physical(out["lineitem"])
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
 
 
 # --- operator plans ---------------------------------------------------------
@@ -244,7 +300,8 @@ def _repetition_stats(spark, tdf):
     return [repetition_stats(_docs(spark))]
 
 
-JVM_ONLY_OPERATORS = {
+# the CDC / event-model / dedup operators of the engine
+HEADLINE_OPERATORS = {
     "snapshot_diff": _snapshot_diff,
     "checksum_merkle": _checksum,
     "compact_events": _compact_events,
@@ -257,6 +314,10 @@ JVM_ONLY_OPERATORS = {
     "ngram_jaccard_pairs": _ngram_jaccard,
     "token_count": _token_count,
     "normalized_fingerprint": _fingerprint,
+}
+
+# the curation / packing operators
+CURATION_OPERATORS = {
     "pii_scrub": _pii_scrub,
     "hash_sample": _hash_sample,
     "chunk_documents": _chunk_documents,
@@ -266,11 +327,31 @@ JVM_ONLY_OPERATORS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(JVM_ONLY_OPERATORS))
-def test_operator_plans_have_no_python_udfs(spark, transcripts_df, name):
-    for df in JVM_ONLY_OPERATORS[name](spark, transcripts_df):
-        plan = _physical(df)
-        assert "EvalPython" not in plan, (name, plan[:2000])
+def _assert_no_python_udfs(spark, tdf, builders):
+    for name, build in sorted(builders.items()):
+        for df in build(spark, tdf):
+            plan = _physical(df)
+            assert "EvalPython" not in plan, (name, plan[:2000])
+
+
+def test_headline_queries_have_no_python_udfs(spark, transcripts_df):
+    """The CDC/engine operators are JVM-only — a Python UDF
+    (BatchEvalPython / ArrowEvalPython) sneaking into these plans is a
+    10-100x regression at scale."""
+    _assert_no_python_udfs(spark, transcripts_df, HEADLINE_OPERATORS)
+
+
+def test_round6_queries_have_no_python_udfs(spark, transcripts_df):
+    """The curation/packing operators stay JVM-only too."""
+    _assert_no_python_udfs(spark, transcripts_df, CURATION_OPERATORS)
+
+
+def test_decontaminate_probe_join_broadcasts(spark):
+    """The eval-shingle side of the contamination probe is broadcast —
+    the corpus side must NOT shuffle for candidate generation (the
+    100 TB property: probing is a map-side join)."""
+    (df,) = _decontamination_report(spark, None)
+    assert "BroadcastHashJoin" in _physical(df)
 
 
 def test_exact_dedup_aggregates_map_side(spark):
@@ -292,11 +373,12 @@ def test_pack_sequences_single_exchange_per_window(spark):
     assert "Window" in plan
 
 
-def test_chunk_is_narrow(spark):
+def test_quantize_and_chunk_are_narrow(spark):
     """Chunking is a pure per-row transform — the operator adds zero
     exchanges on top of its input, so it parallelizes with the scan.
     The input is pre-widened by one deliberate round-robin
-    repartition, which must stay the plan's only exchange."""
+    repartition, which must stay the plan's only exchange.  (The
+    quantization half of this pin went with ``functions/similarity``.)"""
     from hermes_spark.functions.curation import chunk_documents
 
     docs = _docs(spark).repartition(4)

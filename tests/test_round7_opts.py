@@ -115,6 +115,51 @@ def test_simhash_near_pairs_id_offset_pushdown_row_exact(spark, docs):
         assert fast.columns == slow.columns, f"width={width}"
 
 
+def test_q_simhash_verdict_assembly_row_exact(spark, sf_dir, docs):
+    """The SimHash verdict row of the DuckDB oracle (constant booleans:
+    signature values are a function of Spark's xxhash64), assembled on
+    direct operator calls over documents + noisy copies, is exactly
+    ``(n_docs, True, True)``: the banded retrieval with the (a, a+10000)
+    restriction pushed into the join finds EXACTLY the directly
+    computed Hamming-near true pairs (≤6 of 64 bits, 8×8-bit bands),
+    and ≥90% of the noisy copies are that near to their source."""
+    from hermes_spark.functions.dedup import simhash, simhash_near_pairs
+
+    sigs = simhash(docs).persist()
+    found = simhash_near_pairs(
+        sigs, max_hamming=6, bands=8, id_offset=10000
+    ).select("doc_a")
+    a = sigs.select(F.col("doc_id").alias("doc_a"),
+                    F.col("simhash").alias("sig_a"))
+    b = sigs.select((F.col("doc_id") - 10000).alias("doc_a"),
+                    F.col("simhash").alias("sig_b"))
+    exact_true = (
+        a.join(b, "doc_a")
+        .where(F.bit_count(F.expr("sig_a ^ sig_b")) <= 6)
+        .select("doc_a")
+    )
+    sym_diff = exact_true.join(found, "doc_a", "left_anti").unionByName(
+        found.join(exact_true, "doc_a", "left_anti")
+    )
+    docs_t = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    verdict = (
+        docs_t.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+        .crossJoin(sym_diff.agg(F.count(F.lit(1)).alias("_diff")))
+        .crossJoin(exact_true.agg(F.count(F.lit(1)).alias("_near")))
+        .select(
+            "n_docs",
+            (F.col("_diff") == 0).alias("banded_lossless_on_true_pairs"),
+            (F.col("_near") * 10 >= F.col("n_docs") * 9).alias(
+                "noisy_copies_near_ge_90pct"
+            ),
+        )
+    )
+    n_docs = docs_t.count()
+    assert n_docs > 0
+    assert _rows(verdict) == [(n_docs, True, True)]
+    sigs.unpersist()
+
+
 def test_ngram_prefix_via_sorted_array_matches_window_ranking(spark, docs):
     """The groupBy collect + sort_array prefix must select exactly the
     rows the row_number window ranking selected (same (_df, sh) order,
