@@ -757,18 +757,7 @@ def _reconcile_target(pipe, key_specs: dict | None, secret_attrs: set) -> None:
             (f.name, f.dataType.simpleString()) for f in declared_schema.fields
         ]
         if changed_key or changed_schema:
-            tgt._append_record(
-                {
-                    "kind": "create",
-                    "info": {
-                        "key": declared_key,
-                        "schema": [
-                            [f.name, f.dataType.simpleString()]
-                            for f in declared_schema.fields
-                        ],
-                    },
-                }
-            )
+            tgt._append_create(declared_key, declared_schema)
         if sorted(secret_attrs) != sorted(_logged_secrets(tgt)):
             tgt._append_record(
                 {"kind": "secrets", "info": {"attrs": sorted(secret_attrs)}}

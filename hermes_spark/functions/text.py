@@ -16,12 +16,18 @@ def tokens(col: str | Column = "text") -> Column:
     return F.split(F.lower(F.trim(c)), r"\s+")
 
 
+def _nonempty_tokens(col: str | Column) -> Column:
+    # splitting blank text yields [""]: drop empty tokens so "" and
+    # "   " count zero, as ``repetition_stats`` does
+    return F.array_remove(tokens(col), "")
+
+
 def token_count(col: str | Column = "text") -> Column:
-    return F.size(tokens(col)).cast("long")
+    return F.size(_nonempty_tokens(col)).cast("long")
 
 
 def distinct_token_count(col: str | Column = "text") -> Column:
-    return F.size(F.array_distinct(tokens(col))).cast("long")
+    return F.size(F.array_distinct(_nonempty_tokens(col))).cast("long")
 
 
 def normalized_fingerprint(col: str | Column = "text") -> Column:

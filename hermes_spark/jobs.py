@@ -266,10 +266,14 @@ def build_curation(
             if "max_tokens" in b:
                 conds.append(n_tok <= b["max_tokens"])
             if "min_distinct_ratio" in b:
+                # zero tokens: no ratio (ANSI division by zero raises);
+                # keep — the token bounds own emptiness decisions
                 conds.append(
-                    distinct_token_count(text_col).cast("double")
-                    / n_tok.cast("double")
-                    >= b["min_distinct_ratio"]
+                    F.when(n_tok == 0, True).otherwise(
+                        distinct_token_count(text_col).cast("double")
+                        / n_tok.cast("double")
+                        >= b["min_distinct_ratio"]
+                    )
                 )
             if need_rep:
                 r = repetition_stats(

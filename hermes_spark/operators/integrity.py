@@ -1,4 +1,4 @@
-"""Integrity / merge constraints as set-based semi-join fixpoints.
+"""Integrity / merge constraints as set-based semi-joins.
 
 Reference: per-row Jinja predicates evaluated in a Python fixpoint loop
 until no row is removed — merge_constraints
@@ -9,11 +9,8 @@ until no row is removed — merge_constraints
 Spark restatement: each "pkey membership" predicate is a left_semi
 (keep-if-parent-exists) or left_anti (keep-if-absent) join.  A chain of
 FK constraints converges in one topological cascade of semi-joins —
-no iteration needed when the FK graph is acyclic (the reference rejects
-circular FKs at schema build, foreignkey.py:65-87).  For genuinely
-mutually-recursive predicates ``semi_join_fixpoint`` iterates until the
-kept-row count is stable; it converges because each pass only shrinks
-(monotone), exactly the argument the reference's loop relies on.
+no iteration needed, because the FK graph is acyclic (the reference
+rejects circular FKs at schema build, foreignkey.py:65-87).
 
 Scale note: pkey sets are projections of the parent tables — Catalyst
 prunes to the key column, and small parents broadcast, so a constraint
@@ -22,7 +19,7 @@ costs one narrow join, not a per-row interpreted predicate.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -53,23 +50,3 @@ def cascade_fk_filter(
         out[child] = fk_filter(out[child], out[parent], on)
     return out
 
-
-def semi_join_fixpoint(
-    df: DataFrame,
-    step: Callable[[DataFrame], DataFrame],
-    max_iter: int = 20,
-) -> DataFrame:
-    """Iterate a monotone shrinking filter until the row count is
-    stable.  Each iteration triggers a count action; use only for
-    genuinely recursive constraints (rare) — acyclic chains should use
-    ``cascade_fk_filter`` which is a single lazy plan.
-    """
-    cur = df
-    prev_n = cur.count()
-    for _ in range(max_iter):
-        nxt = step(cur)
-        n = nxt.count()
-        if n == prev_n:
-            return nxt
-        cur, prev_n = nxt, n
-    return cur

@@ -33,9 +33,13 @@ accordingly.
 
 Scale: all queue writes are MERGE *deltas* keyed on (key..., offset) —
 O(affected keys) per enqueue/resolve, never an O(queue) rewrite.  The
-table's own ``op`` column is the *event* op, so the MERGE uses a
-separate ``_qop`` channel for upsert/delete-row semantics.  Read
-amplification is bounded out-of-band via ``maintain()``.
+table's own ``op`` column is the *event* op, so the MERGE names a
+separate ``_qop`` channel for upsert/delete-row semantics.  Each delta
+records that channel in its commit line, and the table's liveness rule
+prefers a recorded channel over the in-schema ``op``: a plain
+``table.read()``, ``compact()`` or ``compact_deltas()`` keeps queued
+``delete`` events.  Read amplification is bounded out-of-band via
+``maintain()``.
 """
 
 from __future__ import annotations
@@ -142,14 +146,16 @@ class DeadLetterQueue:
 
     def read(self) -> DataFrame:
         # the queue's own `op` is the EVENT op; row liveness rides the
-        # out-of-schema `_qop` channel recorded per delta
-        return self.table.read(op_col="_qop")
+        # out-of-schema `_qop` channel each delta records, which the
+        # table's liveness rule prefers
+        return self.table.read()
 
     def maintain(self) -> None:
         """Out-of-band queue compaction (fold deltas into a base) plus
-        snapshot GC.  Not ``table.compact()``: that folds liveness
-        through the schema's ``op`` column, which here is the EVENT op
-        — a queued delete-event must survive compaction."""
+        snapshot GC.  An ``overwrite`` of the repartitioned read rather
+        than ``table.compact()``: both keep queued delete-events, but
+        the queue is O(#failing keys), so its base is ONE file, not
+        one per plan partition of the fold."""
         self.table.overwrite(self.read().repartition(1))
         self.table.vacuum(retain_superseded=1)
 

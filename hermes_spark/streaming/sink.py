@@ -178,14 +178,9 @@ class ExactlyOnceSink:
                     # the frame we just persisted as the commit sidecar
                     # IS the split — no read-back needed on the normal
                     # path (the parquet round-trip is for replays only)
-                    if to_enqueue.isEmpty():
-                        # healthy batch, nothing diverted: close the
-                        # queue ledger with a zero-job latch
-                        self.dlq.table.mark_batch(f"sink-{batch_id}")
-                    else:
-                        self.dlq.enqueue(
-                            to_enqueue, batch_id=f"sink-{batch_id}"
-                        )
+                    self._close_queue(
+                        batch_id, None if to_enqueue.isEmpty() else to_enqueue
+                    )
             finally:
                 changes.unpersist()
                 if to_enqueue is not None:
@@ -195,10 +190,9 @@ class ExactlyOnceSink:
             # queue-commit: re-enqueue the ORIGINAL persisted split
             persisted = self.target.read_sidecar_of_batch(batch_id)
             if persisted is not None:
-                if persisted.isEmpty():
-                    self.dlq.table.mark_batch(f"sink-{batch_id}")
-                else:
-                    self.dlq.enqueue(persisted, batch_id=f"sink-{batch_id}")
+                self._close_queue(
+                    batch_id, None if persisted.isEmpty() else persisted
+                )
                 return
             info = self.target.commit_info_of_batch(batch_id)
             if (info or {}).get("split") == "inline":
@@ -208,17 +202,14 @@ class ExactlyOnceSink:
                 if self.transform is not None:
                     changes = self.transform(changes)
                 bad = self._validator_failures(changes)
-                if bad.isEmpty():
-                    self.dlq.table.mark_batch(f"sink-{batch_id}")
-                else:
-                    self.dlq.enqueue(bad, batch_id=f"sink-{batch_id}")
+                self._close_queue(batch_id, None if bad.isEmpty() else bad)
             else:
                 # the split expired (vacuum retention / purge_columns
                 # ran during the downtime): there is nothing left to
                 # re-enqueue — latch the queue ledger closed, or this
                 # branch re-runs on every future replay and the
                 # two-ledger protocol never converges for this batch
-                self.dlq.table.mark_batch(f"sink-{batch_id}")
+                self._close_queue(batch_id, None)
 
     def _validator_ok(self, changes: DataFrame):
         """The exhaustive per-row verdict Column: NULL = "no opinion"
@@ -264,12 +255,22 @@ class ExactlyOnceSink:
         # missing, obs.get raises and the trigger fails with the commit
         # line already carrying ``split: inline``: the replay recomputes
         # the split (``__call__``'s committed-target branch)
-        if (dict(obs.get).get("bad", 0) or 0) == 0:
+        bad = dict(obs.get).get("bad", 0) or 0
+        self._close_queue(
+            batch_id, self._validator_failures(changes) if bad else None
+        )
+
+    def _close_queue(self, batch_id, failures: DataFrame | None) -> None:
+        """Close the queue ledger for a batch — the second of the two
+        ledger writes, after the target commit: a zero-job latch when
+        nothing was diverted (``failures`` None), else enqueue the
+        diverted rows.  The caller owns the emptiness verdict (the
+        inline path reads it from its Observation, so no extra job
+        runs)."""
+        if failures is None:
             self.dlq.table.mark_batch(f"sink-{batch_id}")
         else:
-            self.dlq.enqueue(
-                self._validator_failures(changes), batch_id=f"sink-{batch_id}"
-            )
+            self.dlq.enqueue(failures, batch_id=f"sink-{batch_id}")
 
     def _split_failures(self, changes: DataFrame):
         """Reference client loop (clients/__init__.py:913-1020): rows

@@ -30,6 +30,16 @@ latest-per-key, and ``compact``/``compact_deltas`` bound that fold
 out-of-band — the same shape as Iceberg's merge-on-read row-level
 operations plus ``rewrite_data_files``.  The *logical* plan is what
 the engine owns and is format-independent.
+
+Each table rule lives in one place:
+
+* ``_walk`` — THE ledger walk: which commits supersede which (live
+  base, live deltas, superseded generations);
+* ``_channel`` — which column marks a commit's rows deleted;
+* ``_latest_per_key`` — THE per-key fold (``read`` and
+  ``compact_deltas``);
+* ``_publish`` — THE durable write point: allocate a version, write
+  its snapshot dir, append its commit line.
 """
 
 from __future__ import annotations
@@ -39,11 +49,17 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _schema_spec(schema: T.StructType) -> list[list[str]]:
+    """A schema as the ledger records it: ``[[name, type], ...]``."""
+    return [[f.name, f.dataType.simpleString()] for f in schema.fields]
 
 
 class ParquetMergeTable:
@@ -88,18 +104,7 @@ class ParquetMergeTable:
         # reference's server diffs its schema registry the same way,
         # /root/reference/server/hermesserver.py:340-443)
         if not os.path.exists(self._commits_path):
-            self._append_record(
-                {
-                    "kind": "create",
-                    "info": {
-                        "key": self.key,
-                        "schema": [
-                            [f.name, f.dataType.simpleString()]
-                            for f in self.schema.fields
-                        ],
-                    },
-                }
-            )
+            self._append_create(self.key, self.schema)
         # consumer side of schema evolution: replay the log's schema
         # history so a reader constructed with the original schema sees
         # the evolved one (the reference client's __updateSchema on
@@ -255,6 +260,15 @@ class ParquetMergeTable:
             entry["info"] = info
         self._append_record(entry)
 
+    def _append_create(self, key: Sequence[str], schema: T.StructType) -> None:
+        """Record the declared key + schema that later opens reconcile
+        against (the constructor's first open, and the declarative
+        layer's redeclaration of a still-empty table)."""
+        self._append_record(
+            {"kind": "create",
+             "info": {"key": list(key), "schema": _schema_spec(schema)}}
+        )
+
     def committed_batch_ids(self) -> set:
         return self._fold()["batch_ids"]
 
@@ -272,69 +286,120 @@ class ParquetMergeTable:
         commits = self._read_commits()
         return commits[-1]["version"] if commits else None
 
-    def _live_commits(self) -> tuple[dict | None, list[dict]]:
-        """(latest base commit, deltas after it, in commit order).  A
-        ``deltafold`` commit is the per-key fold of the commits listed
-        in its ``info.over`` — those drop out of the live list and the
-        fold takes their place (commit order keeps per-key precedence
-        correct: a fold sits where its newest folded delta sat).
-        Folds may themselves be folded later (leveled compaction)."""
-        commits = self._read_commits()
-        base = None
+    def _walk(self) -> tuple[dict | None, list[dict], list[set[int]]]:
+        """THE ledger walk: replay the commit list into (latest base
+        commit, live deltas after it in commit order, superseded
+        generations oldest first).  The supersession rules live here
+        only:
+
+        * a ``base`` supersedes everything live before it;
+        * a ``deltafold`` is the per-key fold of the commits listed in
+          its ``info.over`` — those drop out of the live list and the
+          fold takes their place (commit order keeps per-key precedence
+          correct: a fold sits where its newest folded delta sat).  A
+          legacy fold without ``over`` supersedes every earlier delta.
+          Folds may themselves be folded later (leveled compaction).
+
+        A generation is the set of versions one superseding commit
+        replaced — the unit a concurrently-planned reader's file
+        listing references (``vacuum(retain_superseded=N)``)."""
+        base: dict | None = None
         deltas: list[dict] = []
-        for c in commits:
+        gens: list[set[int]] = []
+        for c in self._read_commits():
             kind = c.get("kind", "base")
             if kind == "base":
+                gone = ([base] if base else []) + deltas
                 base, deltas = c, []
             elif kind == "deltafold":
                 over = set((c.get("info") or {}).get("over") or ())
-                if over:
-                    deltas = [d for d in deltas if d["version"] not in over]
-                else:
-                    deltas = []  # legacy fold: superseded all prior deltas
-                deltas.append(c)
+                gone = [d for d in deltas if not over or d["version"] in over]
+                deltas = [
+                    d for d in deltas if over and d["version"] not in over
+                ] + [c]
             else:
+                gone = []
                 deltas.append(c)
+            if gone:
+                gens.append({x["version"] for x in gone})
+        return base, deltas, gens
+
+    def _live_commits(self) -> tuple[dict | None, list[dict]]:
+        """(latest base commit, live deltas after it, in commit order)."""
+        base, deltas, _ = self._walk()
         return base, deltas
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, "versions", f"v{v:08d}")
 
-    def _snapshot_scan(
-        self, version: int, schema: T.StructType | None = None
-    ) -> DataFrame:
-        """Scan one snapshot dir — ALWAYS with an explicit schema,
-        never inferred from footers.  This is what makes a snapshot
-        dir without data files readable: schema inference over a dir
-        holding only _SUCCESS raises UNABLE_TO_INFER_SCHEMA, bricking
-        every subsequent read (an all-stale micro-batch is a normal
-        event under re-delivery).  Schema-on-read also conforms old
-        snapshots for free: columns missing from the files
+    def _scan(self, c: dict) -> DataFrame:
+        """Scan one commit's snapshot dir — ALWAYS with an explicit
+        schema, never inferred from footers.  This is what makes a
+        snapshot dir without data files readable: schema inference over
+        a dir holding only _SUCCESS raises UNABLE_TO_INFER_SCHEMA,
+        bricking every subsequent read (an all-stale micro-batch is a
+        normal event under re-delivery).  Schema-on-read also conforms
+        old snapshots for free: columns missing from the files
         (pre-evolution snapshots) come back NULL, and columns dropped
         from the schema are ignored.  Snapshots written as hive
         ``_bucket=N/`` dirs (the join-mode layout before the target
         dropped its bucket column) read too: partition discovery
         appends ``_bucket``, and every caller selects the schema's
-        columns.  The ONE place the scan discipline lives — base,
-        delta, and fold reads all come through here."""
-        return self.spark.read.schema(schema or self.schema).parquet(
-            self._version_dir(version)
-        )
-
-    def _delta_scan(self, d: dict) -> tuple[DataFrame, str | None]:
-        """Scan one delta/deltafold commit with its recorded
-        out-of-schema op channel widened into the read schema — the
-        ONE place that knows how a delta's liveness channel is stored
-        (shared by ``read()`` and ``compact_deltas()``, so fold
-        results can never silently diverge from read results)."""
-        extra_op = (d.get("info") or {}).get("op_col")
-        dschema = None
-        if extra_op and extra_op not in {f.name for f in self.schema.fields}:
-            dschema = T.StructType(
-                list(self.schema.fields)
-                + [T.StructField(extra_op, T.StringType(), True)]
+        columns.  A commit's recorded out-of-schema liveness channel
+        (``info.op_col``) is widened into the read schema."""
+        schema = self.schema
+        rec = (c.get("info") or {}).get("op_col")
+        if rec and rec not in {f.name for f in schema.fields}:
+            schema = T.StructType(
+                list(schema.fields) + [T.StructField(rec, T.StringType(), True)]
             )
-        return self._snapshot_scan(d["version"], dschema), extra_op
+        return self.spark.read.schema(schema).parquet(self._version_dir(c["version"]))
+
+    def _channel(self, c: dict, op_col: str | None) -> str | None:
+        """THE liveness rule: the column whose value ``delete`` marks a
+        row of commit ``c`` deleted — the commit's recorded
+        ``info.op_col`` if it has one, else the in-schema ``op_col``.
+        A ``base`` never marks a row deleted, and ``op_col=None`` keeps
+        every row (None = no channel).  The recorded channel wins, so a
+        table whose schema carries its own ``op`` payload column (the
+        error queue's EVENT op) keeps that column's ``delete`` rows."""
+        if op_col is None or c.get("kind", "base") == "base":
+            return None
+        rec = (c.get("info") or {}).get("op_col")
+        if rec:
+            return rec
+        return op_col if op_col in {f.name for f in self.schema.fields} else None
+
+    def _latest_per_key(
+        self,
+        commits: Sequence[dict | None],
+        fields: Sequence[str],
+        op_col: str | None,
+        tag: str,
+        tag_of: Callable[[str | None], Column],
+    ) -> DataFrame:
+        """THE per-key fold (``read()`` and ``compact_deltas()``, so fold
+        results can never diverge from read results): scan each commit,
+        tag its rows with their commit order ``_seq`` (the position in
+        ``commits``; None entries are skipped but keep their slot) and
+        with ``tag_of(channel)`` as column ``tag``, union, and keep the
+        newest row per key — ``max_by(struct(payload), _seq)``.  The
+        result keeps ``_seq`` and ``tag``."""
+        parts = [
+            self._scan(c)
+            .withColumn("_seq", F.lit(seq))
+            .withColumn(tag, tag_of(self._channel(c, op_col)))
+            .select(*fields, "_seq", tag)
+            for seq, c in enumerate(commits)
+            if c is not None
+        ]
+        allrows = reduce(DataFrame.unionByName, parts)
+        payload = [c for c in allrows.columns if c not in self.key]
+        return (
+            allrows.groupBy(*self.key)
+            .agg(F.max_by(F.struct(*payload), F.col("_seq")).alias("_r"))
+            .select(*self.key, "_r.*")
+        )
 
     def _sidecar_dir(self, v: int) -> str:
         return os.path.join(self.path, "versions", f"v{v:08d}-sidecar")
@@ -379,9 +444,6 @@ class ParquetMergeTable:
         v = self.version_of_batch(batch_id)
         return self.read_sidecar(v) if v is not None else None
 
-    def _write_snapshot(self, df: DataFrame, cols: Sequence[str], out: str) -> None:
-        df.select(list(cols)).write.mode("overwrite").parquet(out)
-
     # -- read ----------------------------------------------------------
 
     def read(
@@ -389,8 +451,12 @@ class ParquetMergeTable:
         op_col: str | None = "op",
         columns: Sequence[str] | None = None,
     ) -> DataFrame:
-        """Current state: base ⊎ deltas, latest-per-key wins; op delete
-        drops the key unless tombstone_mode='retain' (the merge-on-read
+        """Current state: the live base ⊎ deltas of the ledger walk
+        (``_walk``), latest-per-key wins through the one per-key fold
+        (``_latest_per_key``); a winner whose liveness channel
+        (``_channel``: the commit's recorded ``op_col``, else the
+        in-schema ``op_col``) says ``delete`` is dropped unless
+        tombstone_mode='retain' or ``op_col=None`` (the merge-on-read
         reconstruction).
 
         ``columns``: prune the fold to these columns (must include the
@@ -411,47 +477,40 @@ class ParquetMergeTable:
             fields = [c for c in fields if c in keep]
         if base is None and not deltas:
             return self.spark.createDataFrame([], self.schema)
-
-        parts = []
-        if base is not None:
-            parts.append(
-                self._snapshot_scan(base["version"])
-                .select(*fields)
-                .withColumn("_seq", F.lit(0))
-                .withColumn("_del", F.lit(False))
-            )
-        for i, d in enumerate(deltas):
-            raw, extra_op = self._delta_scan(d)
-            if extra_op and op_col is not None and op_col not in fields:
-                dele = F.col(extra_op) == "delete"
-            elif op_col in fields:
-                dele = F.col(op_col) == "delete"
-            else:
-                dele = F.lit(False)
-            parts.append(
-                raw.withColumn("_seq", F.lit(i + 1))
-                .withColumn("_del", dele)
-                .select(*fields, "_seq", "_del")
-            )
-        allrows = parts[0]
-        for p in parts[1:]:
-            allrows = allrows.unionByName(p)
-        payload = [c for c in allrows.columns if c not in self.key]
-        latest = (
-            allrows.groupBy(*self.key)
-            .agg(F.max_by(F.struct(*payload), F.col("_seq")).alias("_r"))
-            .select(*self.key, "_r.*")
+        latest = self._latest_per_key(
+            [base, *deltas], fields, op_col, "_del",
+            lambda ch: F.col(ch) == "delete" if ch else F.lit(False),
         )
         return latest.where(~F.col("_del")).drop("_seq", "_del")
 
     # -- write / merge ---------------------------------------------------
 
-    def overwrite(self, df: DataFrame, batch_id: int | str | None = None) -> None:
+    def _publish(
+        self,
+        df: DataFrame,
+        kind: str,
+        batch_id: int | str | None = None,
+        info: dict | None = None,
+        cols: Sequence[str] | None = None,
+        sidecar: DataFrame | None = None,
+    ) -> int:
+        """THE durable write point: allocate the next version, write
+        its sidecar (if any), then its snapshot dir ``versions/v%08d``
+        (``cols``, default the schema's columns), then append its
+        commit line — the atomic publication point for data + sidecar
+        together.  Returns the version."""
         v = (self.current_version() or 0) + 1
-        self._write_snapshot(
-            df, [f.name for f in self.schema.fields], self._version_dir(v)
-        )
-        self._append_commit(v, batch_id, kind="base")
+        info = dict(info or {})
+        if sidecar is not None:
+            sidecar.write.mode("overwrite").parquet(self._sidecar_dir(v))
+            info["sidecar_schema"] = sidecar.schema.json()
+        cols = list(cols or [f.name for f in self.schema.fields])
+        df.select(cols).write.mode("overwrite").parquet(self._version_dir(v))
+        self._append_commit(v, batch_id, kind=kind, info=info or None)
+        return v
+
+    def overwrite(self, df: DataFrame, batch_id: int | str | None = None) -> None:
+        self._publish(df, "base", batch_id)
 
     def merge(
         self,
@@ -481,23 +540,17 @@ class ParquetMergeTable:
         against a queue that may have changed in between."""
         if batch_id is not None and batch_id in self.committed_batch_ids():
             return None
-        v = (self.current_version() or 0) + 1
-        fields = [f.name for f in self.schema.fields]
-        write_cols = list(fields)
+        write_cols = [f.name for f in self.schema.fields]
         info = dict(commit_info or {})
         # the op column must reach the delta even when the target schema
         # doesn't carry it — otherwise deletes silently degrade to
         # upserts of the tombstone payload at read time
-        if op_col in changes.columns and op_col not in fields:
+        if op_col in changes.columns and op_col not in write_cols:
             write_cols.append(op_col)
             info["op_col"] = op_col
-        if sidecar is not None:
-            # written BEFORE the ledger append: the commit line is the
-            # atomic publication point for data + sidecar together
-            sidecar.write.mode("overwrite").parquet(self._sidecar_dir(v))
-            info["sidecar_schema"] = sidecar.schema.json()
-        self._write_snapshot(changes, write_cols, self._version_dir(v))
-        self._append_commit(v, batch_id, kind="delta", info=info or None)
+        v = self._publish(
+            changes, "delta", batch_id, info, write_cols, sidecar=sidecar
+        )
         if self.compact_every is not None:
             _, deltas = self._live_commits()
             if len(deltas) >= self.compact_every:
@@ -643,41 +696,7 @@ class ParquetMergeTable:
             current = current.where(
                 (F.col("op") != "delete") | (F.col("ts") >= tombstone_retention)
             )
-        v = (self.current_version() or 0) + 1
-        self._write_snapshot(
-            current, [f.name for f in self.schema.fields], self._version_dir(v)
-        )
-        self._append_commit(v, None, kind="base")
-
-    def _superseded_generations(self) -> list[set[int]]:
-        """Replay the ledger into the list of superseded GENERATIONS,
-        oldest first: each superseding commit (``base`` or
-        ``deltafold``) contributes the set of versions that were live
-        immediately before it and are not live after — the unit a
-        concurrently-planned reader's file listing references."""
-        gens: list[set[int]] = []
-        base: dict | None = None
-        deltas: list[dict] = []
-        for c in self._read_commits():
-            kind = c.get("kind", "base")
-            if kind == "base":
-                prev = ([base] if base else []) + deltas
-                if prev:
-                    gens.append({x["version"] for x in prev})
-                base, deltas = c, []
-            elif kind == "deltafold":
-                over = set((c.get("info") or {}).get("over") or ())
-                if over:
-                    folded = [d for d in deltas if d["version"] in over]
-                    deltas = [d for d in deltas if d["version"] not in over]
-                else:
-                    folded, deltas = deltas, []
-                if folded:
-                    gens.append({x["version"] for x in folded})
-                deltas.append(c)
-            else:
-                deltas.append(c)
-        return gens
+        self._publish(current, "base")
 
     def compact_deltas(self, max_folds: int = 8) -> int | None:
         """Incremental (leveled) compaction: fold the UNFOLDED suffix
@@ -692,16 +711,19 @@ class ParquetMergeTable:
         bound.  Full O(table) rebasing remains ``compact()``'s job,
         out-of-band.
 
-        Per-key semantics mirror ``read()``'s fold exactly (the scan
-        goes through the same ``_delta_scan`` helper): the newest row
-        wins and its LIVENESS CHANNEL (the commit's recorded
-        ``op_col``, or the in-schema ``op``) survives into the fold —
-        a key deleted by a delta stays a delete-marked row here, so
-        the base's copy is still dropped at read time.  In
-        ``tombstone_mode='retain'`` rows are state memory and carry
-        their in-schema op verbatim.  Returns the fold's version, or
-        None when there is nothing to fold."""
-        base, deltas = self._live_commits()
+        Per-key semantics are ``read()``'s exactly (both run the one
+        per-key fold, ``_latest_per_key``): the newest row wins and its
+        LIVENESS CHANNEL (``_channel``: the commit's recorded
+        ``op_col``, or the in-schema ``op``) survives into the fold — a
+        key deleted by a delta stays a delete-marked row here, so the
+        base's copy is still dropped at read time.  When a folded commit
+        recorded a channel, the fold records ``_fold_op`` for every row;
+        otherwise an in-schema ``op`` is part of the payload and
+        survives by itself.  In ``tombstone_mode='retain'``
+        rows are state memory and carry their in-schema op verbatim.
+        Returns the fold's version, or None when there is nothing to
+        fold."""
+        _, deltas = self._live_commits()
         last_fold = max(
             (
                 i for i, d in enumerate(deltas)
@@ -717,47 +739,23 @@ class ParquetMergeTable:
         if len(to_fold) < 2:
             return None
         fields = [f.name for f in self.schema.fields]
-        schema_names = set(fields)
-        retain = self.tombstone_mode == "retain"
-        need_channel = False
-        parts = []
-        for i, d in enumerate(to_fold):
-            raw, extra_op = self._delta_scan(d)
-            if retain or (extra_op is None and "op" not in schema_names):
-                chan = F.lit(None).cast("string")
-            elif extra_op and extra_op not in schema_names:
-                chan = F.col(extra_op)
-                need_channel = True
-            else:
-                # liveness rides the in-schema op column — it is part
-                # of the payload and survives the fold by itself
-                chan = F.lit(None).cast("string")
-            parts.append(
-                raw.withColumn("_seq", F.lit(i))
-                .withColumn("_fold_op", chan)
-                .select(*fields, "_seq", "_fold_op")
-            )
-        allrows = parts[0]
-        for p in parts[1:]:
-            allrows = allrows.unionByName(p)
-        payload = [c for c in allrows.columns if c not in self.key]
-        folded = (
-            allrows.groupBy(*self.key)
-            .agg(F.max_by(F.struct(*payload), F.col("_seq")).alias("_r"))
-            .select(*self.key, "_r.*")
-            .drop("_seq")
+        op_col = None if self.tombstone_mode == "retain" else "op"
+        recorded = {self._channel(d, op_col) for d in to_fold} - {None, *fields}
+        # a recorded fold channel decides liveness for ALL its rows: a
+        # row whose commit had no channel is live, one whose channel
+        # was the in-schema op carries that op
+        folded = self._latest_per_key(
+            to_fold, fields, op_col, "_fold_op",
+            lambda ch: (
+                (F.col(ch) if ch else F.lit("upsert")) if recorded
+                else F.lit(None).cast("string")
+            ),
         )
-        write_cols = list(fields)
         info: dict = {"over": [d["version"] for d in to_fold]}
-        if need_channel:
-            write_cols.append("_fold_op")
+        if recorded:
             info["op_col"] = "_fold_op"
-        else:
-            folded = folded.drop("_fold_op")
-        v = (self.current_version() or 0) + 1
-        self._write_snapshot(folded, write_cols, self._version_dir(v))
-        self._append_commit(v, None, kind="deltafold", info=info)
-        return v
+            fields = fields + ["_fold_op"]
+        return self._publish(folded, "deltafold", info=info, cols=fields)
 
     def vacuum(
         self, keep_sidecars: int = 2, retain_superseded: int = 0
@@ -795,19 +793,18 @@ class ParquetMergeTable:
         ``retain_superseded=1`` for this reason.  A read planned MORE
         than N maintenance cycles ago can still fail at action time
         (documented trade-off: retention bounds disk, not reader
-        age)."""
-        base, deltas = self._live_commits()
+        age).  Live set and generations come from the one ledger walk
+        (``_walk``)."""
+        base, deltas, gens = self._walk()
         live = {c["version"] for c in ([base] if base else []) + deltas}
         vdir = os.path.join(self.path, "versions")
         sidecar_versions = sorted(
             int(n[1:9]) for n in os.listdir(vdir) if n.endswith("-sidecar")
         )
         keep_sc = set(sidecar_versions[-keep_sidecars:] if keep_sidecars else [])
-        keep_data: set[int] = set()
-        if retain_superseded:
-            gens = self._superseded_generations()
-            for g in gens[-retain_superseded:]:
-                keep_data |= g
+        keep_data: set[int] = (
+            set().union(*gens[-retain_superseded:]) if retain_superseded else set()
+        )
         removed: set[int] = set()
         for name in os.listdir(vdir):
             if not (name.startswith("v") and name[1:9].isdigit()):
@@ -856,11 +853,7 @@ class ParquetMergeTable:
         )
         self.key = list(new_key)
         self.schema = new_schema
-        v = (self.current_version() or 0) + 1
-        self._write_snapshot(
-            migrated, [f.name for f in new_schema.fields], self._version_dir(v)
-        )
-        self._append_commit(v, None, kind="base")
+        v = self._publish(migrated, "base")
         self._append_record(
             {"kind": "migrate", "version": v,
              "info": {"old_key": old_key, "new_key": list(new_key),
@@ -871,10 +864,7 @@ class ParquetMergeTable:
                       # these columns without touching reader-declared
                       # columns the log has never seen
                       "removed": removed,
-                      "schema": [
-                          [f.name, f.dataType.simpleString()]
-                          for f in new_schema.fields
-                      ]}}
+                      "schema": _schema_spec(new_schema)}}
         )
 
     def purge_columns(self, cols: Sequence[str]) -> None:
@@ -894,11 +884,7 @@ class ParquetMergeTable:
         self.schema = T.StructType(
             [f for f in self.schema.fields if f.name not in cols]
         )
-        v = (self.current_version() or 0) + 1
-        self._write_snapshot(
-            current, [f.name for f in self.schema.fields], self._version_dir(v)
-        )
-        self._append_commit(v, None, kind="base")
+        v = self._publish(current, "base")
         self._append_record(
             {"kind": "purge", "version": v, "info": {"columns": sorted(cols)}}
         )

@@ -11,6 +11,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F  # noqa: F401 (parity with suite style)
 
 from hermes_spark.__main__ import main
@@ -61,6 +62,18 @@ def test_validate_ok(tmp_work, capsys):
     assert main(["validate", cfg]) == 0
     out = json.loads(capsys.readouterr().out)
     assert out["ok"] is True and out["mode"] == "stateful"
+
+
+EXAMPLES = os.path.join(os.path.dirname(__file__), "..", "examples")
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in os.listdir(EXAMPLES) if n.endswith(".yml"))
+)
+def test_validate_shipped_configs(name, capsys):
+    """Every config shipped in examples/ passes ``validate`` (JVM-free)."""
+    assert main(["validate", os.path.join(EXAMPLES, name)]) == 0
+    assert json.loads(capsys.readouterr().out)["ok"] is True
 
 
 def test_validate_names_config_path(tmp_work, capsys):

@@ -192,25 +192,33 @@ def test_simhash_token_doc_freq_prefilter(spark):
 def test_fingerprint_and_token_count_match_python(spark):
     """normalized_fingerprint is sha256 of the lowercased, space-trimmed
     text with whitespace runs collapsed to one space; token_count counts
-    the whitespace-split tokens of the same normalization."""
+    the whitespace-split tokens of the same normalization (blank text
+    has none)."""
     import hashlib
     import re
 
-    from hermes_spark.functions.text import normalized_fingerprint, token_count
+    from hermes_spark.functions.text import (
+        distinct_token_count,
+        normalized_fingerprint,
+        token_count,
+    )
 
     texts = {
         1: "Hello   World",
         2: "  hello world  ",
         3: "tab\tand\nnewline runs",
         4: "MiXeD Case text, with punctuation!",
+        5: "",
+        6: "   ",
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     got = {
-        r.doc_id: (r.fp, r.n)
+        r.doc_id: (r.fp, r.n, r.d)
         for r in df.select(
             "doc_id",
             normalized_fingerprint("text").alias("fp"),
             token_count("text").alias("n"),
+            distinct_token_count("text").alias("d"),
         ).collect()
     }
     want = {}
@@ -218,7 +226,8 @@ def test_fingerprint_and_token_count_match_python(spark):
         norm = t.lower().strip(" ")
         want[d] = (
             hashlib.sha256(re.sub(r"\s+", " ", norm).encode()).hexdigest(),
-            len(re.split(r"\s+", norm)),
+            len(norm.split()),
+            len(set(norm.split())),
         )
     assert got == want
     assert got[1][0] == got[2][0]  # same text up to case and spacing

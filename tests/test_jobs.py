@@ -158,6 +158,31 @@ hermes-spark:
     assert ids == [1, 3]
 
 
+def test_quality_filter_blank_documents(spark, tmp_work):
+    """Blank text has zero tokens: ``min_tokens: 1`` drops it, and the
+    distinct-ratio bound (undefined at zero tokens) keeps it rather
+    than raising DIVIDE_BY_ZERO under ANSI SQL."""
+    p = os.path.join(tmp_work, "blank")
+    spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "a b c"), (4, "a a a a")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(p)
+
+    def kept(bound):
+        cfg = load_config(f"""
+hermes-spark:
+  curation:
+    input: {p}
+    steps:
+      - op: quality_filter
+        {bound}
+""")
+        return sorted(r.doc_id for r in build_curation(spark, cfg).collect())
+
+    assert kept("min_distinct_ratio: 0.5") == [1, 2, 3]
+    assert kept("min_tokens: 1") == [3, 4]
+
+
 def test_run_curation_writes_and_reports(spark, tmp_work, corpus):
     corpus_path, _ = corpus
     out = os.path.join(tmp_work, "clean")

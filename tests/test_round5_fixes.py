@@ -161,6 +161,19 @@ def test_compact_deltas_preserves_state_with_extra_op_channel(spark, tmp_work):
     assert {(r.id, r.v) for r in t.read().collect()} == after | {(6, "n6")}
 
 
+def test_compact_deltas_keeps_rows_of_a_delta_without_channel(spark, tmp_work):
+    """A fold that records a liveness channel decides liveness for ALL
+    its rows: the rows of a folded delta that carried no op column
+    (plain upserts) stay live."""
+    t = _mk(spark, f"{tmp_work}/t")
+    t.merge(spark.createDataFrame([(1, "a", "insert")], DDL), batch_id=0)
+    t.merge(spark.createDataFrame([(2, "b")], "id int, v string"), batch_id=1)
+    before = {(r.id, r.v) for r in t.read().collect()}
+    assert before == {(1, "a"), (2, "b")}
+    t.compact_deltas()
+    assert {(r.id, r.v) for r in t.read().collect()} == before
+
+
 def test_compact_deltas_in_schema_op_and_retain_mode(spark, tmp_work):
     from pyspark.sql import types as T
 
@@ -275,6 +288,15 @@ def test_compact_deltas_leveling_folds_suffix_then_consolidates(spark, tmp_work)
     t.vacuum(retain_superseded=1)
     for v in deltas[0]["info"]["over"]:
         assert os.path.isdir(t._version_dir(v))
+    # a legacy fold line (written before folds recorded ``over``)
+    # supersedes every earlier live delta, as one generation
+    feed(b)
+    before = [d["version"] for d in t._live_commits()[1]]
+    legacy = t.current_version() + 1
+    t._append_commit(legacy, None, kind="deltafold")
+    _, deltas = t._live_commits()
+    assert [d["version"] for d in deltas] == [legacy]
+    assert t._walk()[2][-1] == set(before) and len(before) == 2
 
 
 def _expired_sidecar_fixture(spark, tmp_work, name):
